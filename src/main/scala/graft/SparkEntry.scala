@@ -11,7 +11,7 @@ object SparkEntry {
     Relational.regionSales(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q01_pricing_summary" -> (Relational.pricingSummary _),
     "q02_top_revenue"     -> (Relational.topRevenue _),
     "q03_segment_revenue" -> (Relational.segmentRevenue _),
@@ -1405,7 +1405,7 @@ object SparkEntry {
 
   /** DuckDB-runnable oracle SQL per query (same parquet tables).
     * Column aliases MUST match the Spark side exactly (SURVEY §5). */
-  def oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Map(
     "q01_pricing_summary" ->
       """SELECT l_returnflag, l_linestatus,
         | round(sum(l_quantity),2) AS sum_qty,

@@ -21,10 +21,11 @@ object StreamingOps {
     * [[RowMaterializer.materialize]], and emits each key's final row
     * state as scalar columns.
     *
-    * Only put mutations are streamed: a row tombstone applies
-    * unconditionally on arrival, so cross-micro-batch arrival order
-    * would change its outcome — tombstone semantics are covered by
-    * the q36 batch oracle and RowMaterializerSpec. For a put-only
+    * Only put mutations are streamed: deletes leave no masking
+    * tombstone (see [[RowMaterializer.applyMutation]]), so
+    * cross-micro-batch arrival order could change their outcome —
+    * tombstone semantics are covered by the q36 batch oracle and
+    * RowMaterializerSpec. For a put-only
     * stream the final state is arrival-order independent (puts are
     * guarded by the (ts, seq) high-water mark), which is what makes
     * this streaming query exactly SQL-replayable.

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, KeyValueGroupedDataset, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.model.{Cell, Mutation, RowState}
 
@@ -10,29 +11,48 @@ import graft.model.{Cell, Mutation, RowState}
   * Keyed by (table, rowkey); state is the current cell map plus the
   * (ts, seq) high-water mark per qualifier. Out-of-order mutations
   * (older (ts, seq) than the applied cell) are ignored — same
-  * semantics as HBase cell versions; row tombstones clear the row.
+  * semantics as HBase cell versions; a row tombstone clears the cells
+  * it is newer than.
   *
   * Scale: state lives in the state store partitioned by key — one
   * shuffle per micro-batch, state size O(live rows), no global sort.
+  * Streaming operators group by the relational key columns, so the
+  * scan stage does not deserialize mutations to compute the key.
+  *
+  * Over [[ExactlyOnce.dedupe]]'s output, [[materialize]] runs the
+  * replay filter inside this one operator (see [[materialize]]).
   */
 object RowMaterializer {
 
   /** Per-qualifier applied version: value + (ts, seq) that wrote it. */
   case class CellV(value: String, ts: Long, seq: Long)
-  case class RowCells(cells: Map[String, CellV], version: Long, deleted: Boolean)
+
+  /** Row state. `seen` holds, when the replay filter is fused in, the
+    * seqs applied within the watermark horizon and when each expires
+    * (event time + delay, epoch micros); it is empty otherwise. */
+  case class RowCells(cells: Map[String, CellV], version: Long, deleted: Boolean,
+      seen: Map[Long, Long] = Map.empty)
+
+  private val Empty = RowCells(Map.empty, 0L, deleted = false)
 
   private def newer(ts: Long, seq: Long, c: CellV): Boolean =
     ts > c.ts || (ts == c.ts && seq > c.seq)
 
   /** Apply one mutation to the row state (pure — unit-testable).
     *
-    * Simplification vs full HBase semantics: a qualifier delete
-    * removes the applied cell but leaves no masking tombstone, so a
-    * LATER-arriving put with an OLDER (ts, seq) than the delete can
-    * resurrect the cell. Within-batch mutations are sorted by
-    * (ts, seq) first, so this only matters for cross-batch
-    * out-of-order deletes — acceptable for WAL replay, where
-    * per-key order is preserved by the source. */
+    * A row tombstone removes the cells whose (ts, seq) is not newer
+    * than its own and marks the row deleted only when no cell
+    * survives, so an older tombstone arriving in a later micro-batch
+    * leaves newer cells in place.
+    *
+    * Simplification vs full HBase semantics: deletes leave no masking
+    * tombstone, so a LATER-arriving put with an OLDER (ts, seq) than a
+    * delete can resurrect the cell, and a late row tombstone that
+    * finds no cell left (all removed by newer qualifier deletes) marks
+    * the row deleted. Within-batch mutations are sorted by (ts, seq)
+    * first, so this only matters for cross-batch out-of-order deletes
+    * — acceptable for WAL replay, where per-key order is preserved by
+    * the source. */
   def applyMutation(st: RowCells, m: Mutation): RowCells = {
     var cells = st.cells
     var deleted = st.deleted
@@ -40,7 +60,9 @@ object RowMaterializer {
       val key = s"${c.family}:${c.qualifier}"
       c.kind match {
         case "delete_row" =>
-          cells = Map.empty; deleted = true
+          cells = cells.filter { case (_, old) =>
+            old.ts > c.ts || (old.ts == c.ts && old.seq > m.seq) }
+          if (cells.isEmpty) deleted = true
         case "delete" =>
           cells.get(key).foreach { old =>
             if (newer(c.ts, m.seq, old)) cells = cells - key
@@ -53,25 +75,77 @@ object RowMaterializer {
           }
       }
     }
-    RowCells(cells, math.max(st.version, m.ts), deleted)
+    st.copy(cells = cells, version = math.max(st.version, m.ts), deleted = deleted)
+  }
+
+  private def rowState(key: (String, String), st: RowCells): RowState =
+    RowState(key._1, key._2, st.cells.map { case (k, v) => k -> v.value }, st.version, st.deleted)
+
+  private def byRow(s: SparkSession, mutations: DataFrame)
+      : KeyValueGroupedDataset[(String, String), Mutation] = {
+    import s.implicits._
+    mutations.groupBy(col("table"), col("rowkey")).as[(String, String), Mutation]
   }
 
   /** Streaming materialization: emits the updated RowState for every
-    * key touched in each micro-batch (OutputMode.Update). */
+    * key touched in each micro-batch (OutputMode.Update).
+    *
+    * Given the output of [[ExactlyOnce.dedupe]] (recognized by
+    * [[ExactlyOnce.beneath]]), the deduplicate operator is not run:
+    * this one operator reads the watermarked input, and under
+    * EventTimeTimeout
+    *  - drops rows at or below the watermark, as the deduplicate did;
+    *  - drops a mutation whose seq is in the row's `seen` map, then
+    *    adds the new seqs and prunes entries whose expiry the
+    *    watermark has reached (lookup before pruning, as the
+    *    deduplicate's end-of-batch eviction);
+    *  - sets the row's timeout to its newest expiry, so an idle row's
+    *    `seen` map is emptied once every entry has expired;
+    *  - emits nothing for a key whose batch held only replays.
+    * [[ExactlyOnce]] states where this differs from the standalone
+    * dedupe. The state schema includes `seen`, so checkpoints written
+    * by the two-operator plan cannot be resumed.
+    *
+    * Any other input runs the same function under NoTimeout with an
+    * empty `seen` map. */
   def materialize(s: SparkSession, mutations: Dataset[Mutation]): Dataset[RowState] = {
     import s.implicits._
-    mutations
-      .groupByKey(m => (m.table, m.rowkey))
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (key: (String, String), muts: Iterator[Mutation], state: GroupState[RowCells]) => {
-          val st0 = state.getOption.getOrElse(RowCells(Map.empty, 0L, deleted = false))
-          // WAL order within the batch: (ts, seq)
-          val st = muts.toSeq.sortBy(m => (m.ts, m.seq)).foldLeft(st0)(applyMutation)
-          state.update(st)
-          Iterator.single(RowState(key._1, key._2,
-            st.cells.map { case (k, v) => k -> v.value },
-            st.version, st.deleted))
-        })
+    ExactlyOnce.beneath(mutations) match {
+      case Some((watermarked, delayMs)) =>
+        byRow(s, watermarked).flatMapGroupsWithState(OutputMode.Update,
+          GroupStateTimeout.EventTimeTimeout)(consume(Some(delayMs * 1000L)) _)
+      case None =>
+        byRow(s, mutations.toDF()).flatMapGroupsWithState(OutputMode.Update,
+          GroupStateTimeout.NoTimeout)(consume(None) _)
+    }
+  }
+
+  /** The one materialize operator; `horizonMicros` is the fused
+    * dedupe's watermark delay, None without a replay filter. */
+  private def consume(horizonMicros: Option[Long])(key: (String, String),
+      muts: Iterator[Mutation], state: GroupState[RowCells]): Iterator[RowState] = {
+    val st0 = state.getOption.getOrElse(Empty)
+    val (fresh, seen) = horizonMicros match {
+      case None => (muts.toSeq, st0.seen)
+      case Some(delay) =>
+        val fresh = muts.filterNot(m => st0.seen.contains(m.seq)).toSeq.distinctBy(_.seq)
+        val wm = state.getCurrentWatermarkMs() * 1000L
+        val seen = (st0.seen ++ fresh.map(m => m.seq -> (m.ts + delay))).filter(_._2 > wm)
+        // Spark times out once the watermark (ms) is strictly above the
+        // timestamp: the first watermark at or past the newest expiry
+        if (seen.nonEmpty)
+          state.setTimeoutTimestamp(math.max(1L, Math.floorDiv(seen.values.max - 1, 1000L)))
+        (fresh, seen)
+    }
+    if (fresh.isEmpty) {
+      state.update(st0.copy(seen = seen))
+      Iterator.empty
+    } else {
+      // WAL order within the batch: (ts, seq)
+      val st = fresh.sortBy(m => (m.ts, m.seq)).foldLeft(st0)(applyMutation).copy(seen = seen)
+      state.update(st)
+      Iterator.single(rowState(key, st))
+    }
   }
 
   /** Streaming materialization with bounded state: rows idle past
@@ -85,22 +159,19 @@ object RowMaterializer {
   def materializeWithTTL(s: SparkSession, mutations: Dataset[Mutation],
       ttlMillis: Long): Dataset[RowState] = {
     import s.implicits._
-    mutations
-      .groupByKey(m => (m.table, m.rowkey))
+    byRow(s, mutations.toDF())
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(
         (key: (String, String), muts: Iterator[Mutation], state: GroupState[RowCells]) => {
           if (state.hasTimedOut) {
             state.remove()
             Iterator.single(RowState(key._1, key._2, Map.empty, 0L, deleted = true))
           } else {
-            val st0 = state.getOption.getOrElse(RowCells(Map.empty, 0L, deleted = false))
+            val st0 = state.getOption.getOrElse(Empty)
             val st = muts.toSeq.sortBy(m => (m.ts, m.seq)).foldLeft(st0)(applyMutation)
             state.update(st)
             // version is epoch micros; timeout at version/1000 + ttl
             state.setTimeoutTimestamp(st.version / 1000L + ttlMillis)
-            Iterator.single(RowState(key._1, key._2,
-              st.cells.map { case (k, v) => k -> v.value },
-              st.version, st.deleted))
+            Iterator.single(rowState(key, st))
           }
         })
   }

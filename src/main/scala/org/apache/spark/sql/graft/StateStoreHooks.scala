@@ -1,22 +1,19 @@
 package org.apache.spark.sql.graft
 
-/** Bench-only hook into the executor-side state-store registry
-  * (`private[sql]`, hence this package shim — the same access route
-  * as [[MinHashMd5]]).
+/** Hook into the executor-side state-store registry (`private[sql]`,
+  * hence this package shim — the same access route as [[MinHashMd5]]).
   *
-  * Round-14 root cause of the q299 idle-bench drift: the round-8
-  * mitigation set `stateStore.maintenanceInterval = 5s` so providers
-  * RETAINED after a gate terminates unload promptly instead of
-  * stacking heap/GC pressure into the next gates. But the interval
-  * is global — any gate whose OWN runtime exceeds 5 s now takes
-  * maintenance passes (snapshot uploads across all 32 partitions'
-  * live stores) mid-query: measured on q299 (4 stateful
-  * micro-batches, ~9 s of work), 5s ⇒ 13.5–21.7 s vs 60s ⇒
-  * 8.8–9.7 s over 4 isolated reps each. The deterministic fix is to
-  * keep the DEFAULT interval (no mid-query passes for any gate under
-  * 60 s) and drop the retained providers EXPLICITLY between bench
-  * entries: [[unloadAll]] stops the maintenance task and unloads
-  * every provider; the next stateful query lazily restarts both. */
+  * A finished streaming query leaves its state-store providers loaded
+  * in the executor until the maintenance task (default interval 60 s)
+  * unloads them, so their heap and snapshot work bleed into whatever
+  * runs next. Shortening the interval is no fix: it is global, so a
+  * query running longer than the interval takes maintenance passes
+  * mid-query. Instead, drivers that run many stateful queries in one
+  * JVM call [[unloadAll]] between them, outside any timed region:
+  * `graft.Bench` after each entry and perfbench's `cdc_catchup` after
+  * each drain (also `ProfileJobs` and `Explain`). It stops the
+  * maintenance task and unloads every provider; the next stateful
+  * query lazily restarts both. */
 object StateStoreHooks {
   def unloadAll(): Unit =
     org.apache.spark.sql.execution.streaming.state.StateStore.stop()

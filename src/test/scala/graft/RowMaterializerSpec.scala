@@ -37,6 +37,21 @@ class RowMaterializerSpec extends SparkSpec {
     assert(st4.deleted && st4.cells.isEmpty)
   }
 
+  test("applyMutation: an older row tombstone arriving later keeps newer cells") {
+    val st0 = RowCells(Map.empty, 0L, deleted = false)
+    val st1 = RowMaterializer.applyMutation(st0, put(2, 300, "r1", "a", "v1"))
+    val st2 = RowMaterializer.applyMutation(st1, put(1, 100, "r1", "b", "old"))
+    val st3 = RowMaterializer.applyMutation(st2, Mutation(3, 200, "t", "r1",
+      Seq(Cell("f", "", null, 200, "delete_row"))))
+    assert(st3.cells.keySet == Set("f:a") && st3.cells("f:a").value == "v1")
+    assert(!st3.deleted)
+    // the same mutations in WAL order give the same row
+    val batch = Seq(put(1, 100, "r1", "b", "old"), Mutation(3, 200, "t", "r1",
+      Seq(Cell("f", "", null, 200, "delete_row"))), put(2, 300, "r1", "a", "v1"))
+      .foldLeft(st0)(RowMaterializer.applyMutation)
+    assert(batch == st3)
+  }
+
   test("streaming materialize over MemoryStream applies WAL order") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
