@@ -61,18 +61,10 @@ object Bench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
-      // Streaming-gate variance mechanism (StreamVarianceProbe r8,
-      // root-caused fully in r14): after a gate's query terminates,
-      // its HDFS-backed state-store providers stay loaded in-JVM
-      // until the maintenance pass notices — retained state from
-      // PRIOR entries stacks heap/GC pressure into whichever entries
-      // follow. The r8 fix (maintenanceInterval = 5s) traded that
-      // for a NEW drift: any gate whose own runtime exceeds 5 s
-      // takes maintenance snapshot passes MID-QUERY (q299 measured
-      // 13.5-21.7 s at 5s vs 8.8-9.7 s at 60s, 4 isolated reps
-      // each — see StateStoreHooks). Keep the default interval and
-      // instead unload retained providers DETERMINISTICALLY between
-      // entries (StateStoreHooks.unloadAll() after each run below).
+      // The state-store maintenance interval stays at its default: a
+      // shorter one runs snapshot passes inside long streaming gates.
+      // State-store providers a finished gate leaves loaded are
+      // unloaded between entries instead (unloadState below).
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Timed action = noop-sink write: every output column is fully
@@ -81,12 +73,10 @@ object Bench {
     // expression-heavy queries).
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-    // Drop state-store providers the finished query retained so they
-    // can't bleed maintenance/GC work into the NEXT entry (the r8
-    // pollution mechanism, now handled without the 5s
-    // mid-query-maintenance side effect — see StateStoreHooks).
-    // Called OUTSIDE the timed region: the unload is inter-entry
-    // housekeeping, not part of any query's cost.
+    // Drop the state-store providers a finished query left loaded, so
+    // their heap and maintenance work do not land in the next entry
+    // (see StateStoreHooks). Called outside the timed region: it is
+    // housekeeping between entries, not part of any query's cost.
     def unloadState(): Unit =
       org.apache.spark.sql.graft.StateStoreHooks.unloadAll()
     // Dev-only subset filter (regex on query name), mirroring
@@ -122,8 +112,10 @@ object Bench {
     //     SF — ~2x total wall-clock), kept for A/B forensics.
     //   none: no warm-up at all (dev-only, coldest numbers).
     val warmMode = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "small")
+    // Reads through Tables.load, so the warm-up also fills its
+    // schema memo for the timed dataset.
     def preReadTables(): Unit = Tables.all.foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet")
+      try Tables.load(spark, sfDir, t)
         .write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
     }
@@ -204,7 +196,7 @@ object Bench {
       import org.apache.spark.sql.functions._
       val boiler = "breaking news update for subscribers of the premium daily channel " +
         "feed please share and subscribe for more updates from the editorial team"
-      val skewed = spark.read.parquet(s"$sfDir/documents.parquet")
+      val skewed = Tables.documents(spark, sfDir)
         .select(col("doc_id"), concat(lit(boiler + " "), col("text")).as("text"))
       val t0 = System.nanoTime()
       val ok = try {

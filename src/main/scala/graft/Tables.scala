@@ -1,20 +1,79 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loaders for the driver-generated star schema.
   *
   * At cluster scale these would be catalog tables (bucketed on their
   * join keys); here we read the driver's single-file parquet dirs.
   * Column pruning + predicate pushdown still apply (v2 parquet scan).
+  *
+  * Schema memo: [[load]] is the one seam for every registry read, and
+  * a parquet read without a schema runs a Spark job to read a footer.
+  * The memo holds one entry per qualified path: the sorted
+  * (path, size, mtime) of the files under it, the session's
+  * `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*` settings,
+  * and the schema Spark's own inference returned under them. A read whose files and settings
+  * match the entry passes that schema to the reader and runs no job;
+  * any mismatch infers again and replaces the entry. Only the schema
+  * is kept, never a DataFrame, so every read still lists the files
+  * afresh. Errors are Spark's own: a missing path or a directory with
+  * nothing to infer from raises the reader's AnalysisException, and
+  * nothing is memoized for it.
   */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A memo entry: the schema and the files and settings it was
+    * inferred from. */
+  private final case class Inferred(files: Seq[(String, Long, Long)],
+      conf: Map[String, String], schema: StructType)
+
+  private val inferred = new ConcurrentHashMap[String, Inferred]()
+
+  /** Qualified paths the schema memo holds an entry for. */
+  private[graft] def memoized: Set[String] = {
+    import scala.jdk.CollectionConverters._
+    inferred.keySet.asScala.toSet
+  }
+
+  /** `spark.read.parquet` of the table, with the schema taken from
+    * the memo when the files and parquet settings are those it was
+    * inferred from. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val key = fs.makeQualified(p).toString
+    val files = fingerprint(fs, p)
+    val conf = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") }
+    Option(inferred.get(key)) match {
+      case Some(e) if files.nonEmpty && e.files == files && e.conf == conf =>
+        spark.read.schema(e.schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        if (files.nonEmpty) inferred.put(key, Inferred(files, conf, df.schema))
+        df
+    }
+  }
+
+  /** Sorted (path, size, mtime) of every file at or below `p`; empty
+    * when `p` does not exist. Reads only sizes and mtimes: on the
+    * local file system asking a status for its permission forks `ls`. */
+  private def fingerprint(fs: FileSystem, p: Path): Seq[(String, Long, Long)] = {
+    def walk(st: FileStatus): Seq[(String, Long, Long)] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk)
+      else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+    try walk(fs.getFileStatus(p)).sorted
+    catch { case _: java.io.FileNotFoundException => Nil }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")
@@ -97,41 +156,29 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 
-  /** r17 optimization, re-sized r18 (guide §2.5, unsplittable-input
-    * treatment; VERDICT r17 "Next #1"): spread `df` across more
-    * tasks when its scan yields fewer partitions than the work
-    * warrants — the local single-file parquet datasets otherwise
-    * serialize every downstream per-row computation (md5 shingling
-    * of every trigram) onto ONE task.
+  /** Spread `df` across more tasks when its scan yields fewer
+    * partitions than its work warrants: a single-file parquet input
+    * otherwise runs every downstream per-row computation (md5 of every
+    * trigram, say) on one task.
     *
-    * r18 change: the target is INPUT-DERIVED, not the local core
-    * count — ceil(inputBytes · workFactor / 32 MB), clamped to
-    * [1, defaultParallelism]. `workFactor` is the measured per-byte
-    * CPU-work multiplier of the seam (an md5-per-trigram pass does
-    * ~4096 bytes of hashing per input byte: ~0.6 MB of text took
-    * ~6 s serial ≈ the time a core needs for ~2.4 GB of md5), so
-    * the sizing is the guide's bytes-per-task formula applied to
-    * EFFECTIVE work, valid at any scale: a tiny warm-up SF gets 1
-    * partition (no exchange at all), sf0.1 gets the cores it can
-    * use, and a cluster-scale scan already has ≥ cores partitions —
-    * identity, no shuffle — regardless of the factor. Unknown stats
-    * (no file source below) conservatively count as large. The
-    * round-robin exchange is deterministic (sortBeforeRepartition,
-    * default on) and every operator in this library is partition-
-    * and order-invariant by construction (the oracle-replayability
-    * house rule), so results are unchanged.
+    * The target is derived from the input, not the core count:
+    * ceil(inputBytes · workFactor / 32 MB), clamped to
+    * [1, defaultParallelism]. `workFactor` is the seam's CPU work per
+    * input byte; the default 4096 is an md5-per-trigram pass (~0.6 MB
+    * of text took ~6 s on one core, the time a core needs for ~2.4 GB
+    * of md5). So a tiny input gets 1 partition and no exchange, a
+    * larger one the cores it can use, and a scan that already has at
+    * least that many partitions is returned as is.
     *
-    * UNKNOWN stats (no file source below — a checkpointed loop
-    * frame, a streaming micro-batch) are identity: we cannot size
-    * what we cannot see, and blindly shuffling such frames is
-    * exactly the r17 q133 / per-micro-batch mistake. A frame whose
-    * stats report the defaultSizeInBytes sentinel is left alone.
+    * Frames whose size is unknown (no file source below, e.g. a
+    * checkpointed loop frame or a streaming micro-batch, which report
+    * the defaultSizeInBytes sentinel) are returned unchanged.
     *
-    * r17 shipped this at a flat `defaultParallelism` on 14 seams;
-    * the round-17 driver bench measured 10 of them as net losses at
-    * the ground-truth SF (banding, simhash, WAV stagers — VERDICT
-    * r17 "What's wrong" 1–2), so r18 keeps only the seams with a
-    * measured win (winnowing q101/q110) and re-sizes as above. */
+    * The round-robin exchange is deterministic (sortBeforeRepartition,
+    * on by default) and the operators of this library are partition-
+    * and order-invariant, so results do not change. Call it only at
+    * seams where it measured a win: before a cheap per-row pass the
+    * exchange costs more than it saves. */
   def spread(s: SparkSession, df: DataFrame,
       workFactor: Long = 4096L): DataFrame = {
     val cores = BigInt(s.sparkContext.defaultParallelism)

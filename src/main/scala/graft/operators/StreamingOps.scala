@@ -21,8 +21,8 @@ object StreamingOps {
     * [[RowMaterializer.materialize]], and emits each key's final row
     * state as scalar columns.
     *
-    * Only put mutations are streamed: deletes leave no masking
-    * tombstone (see [[RowMaterializer.applyMutation]]), so
+    * Only put mutations are streamed: qualifier deletes leave no
+    * masking tombstone (see [[RowMaterializer.applyMutation]]), so
     * cross-micro-batch arrival order could change their outcome —
     * tombstone semantics are covered by the q36 batch oracle and
     * RowMaterializerSpec. For a put-only

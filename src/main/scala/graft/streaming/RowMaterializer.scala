@@ -12,7 +12,7 @@ import graft.model.{Cell, Mutation, RowState}
   * (ts, seq) high-water mark per qualifier. Out-of-order mutations
   * (older (ts, seq) than the applied cell) are ignored — same
   * semantics as HBase cell versions; a row tombstone clears the cells
-  * it is newer than.
+  * it is newer than and masks older puts that arrive after it.
   *
   * Scale: state lives in the state store partitioned by key — one
   * shuffle per micro-batch, state size O(live rows), no global sort.
@@ -27,55 +27,75 @@ object RowMaterializer {
   /** Per-qualifier applied version: value + (ts, seq) that wrote it. */
   case class CellV(value: String, ts: Long, seq: Long)
 
-  /** Row state. `seen` holds, when the replay filter is fused in, the
-    * seqs applied within the watermark horizon and when each expires
-    * (event time + delay, epoch micros); it is empty otherwise. */
+  /** The (ts, seq) of a row marker not yet set. */
+  final val Never = Long.MinValue
+
+  /** Row state. (`putTs`, `putSeq`) is the newest applied put and
+    * (`tombTs`, `tombSeq`) the newest row tombstone, [[Never]] until
+    * there is one; `deleted` is set from their order. `seen` holds,
+    * when the replay filter is fused in, the seqs applied within the
+    * watermark horizon and when each expires (event time + delay,
+    * epoch micros); it is empty otherwise. */
   case class RowCells(cells: Map[String, CellV], version: Long, deleted: Boolean,
-      seen: Map[Long, Long] = Map.empty)
+      seen: Map[Long, Long] = Map.empty,
+      putTs: Long = Never, putSeq: Long = Never,
+      tombTs: Long = Never, tombSeq: Long = Never)
 
   private val Empty = RowCells(Map.empty, 0L, deleted = false)
 
-  private def newer(ts: Long, seq: Long, c: CellV): Boolean =
-    ts > c.ts || (ts == c.ts && seq > c.seq)
+  private def after(ts: Long, seq: Long, ts0: Long, seq0: Long): Boolean =
+    ts > ts0 || (ts == ts0 && seq > seq0)
+
+  private def newer(ts: Long, seq: Long, c: CellV): Boolean = after(ts, seq, c.ts, c.seq)
 
   /** Apply one mutation to the row state (pure — unit-testable).
     *
-    * A row tombstone removes the cells whose (ts, seq) is not newer
-    * than its own and marks the row deleted only when no cell
-    * survives, so an older tombstone arriving in a later micro-batch
-    * leaves newer cells in place.
+    * Every comparison is on (ts, seq), so apart from the
+    * simplification below the result does not depend on the order
+    * mutations arrive in:
+    *  - a put writes its cell when it is newer than the cell's version
+    *    and than the newest row tombstone (the tombstone masks it);
+    *  - a qualifier delete removes its cell when it is newer;
+    *  - a row tombstone removes the cells whose (ts, seq) is not newer
+    *    than its own;
+    *  - the row is `deleted` when its newest row tombstone is not older
+    *    than its newest applied put.
     *
-    * Simplification vs full HBase semantics: deletes leave no masking
-    * tombstone, so a LATER-arriving put with an OLDER (ts, seq) than a
-    * delete can resurrect the cell, and a late row tombstone that
-    * finds no cell left (all removed by newer qualifier deletes) marks
-    * the row deleted. Within-batch mutations are sorted by (ts, seq)
-    * first, so this only matters for cross-batch out-of-order deletes
-    * — acceptable for WAL replay, where per-key order is preserved by
-    * the source. */
+    * Simplification vs full HBase semantics: a qualifier delete leaves
+    * no masking tombstone, so a LATER-arriving put with an OLDER
+    * (ts, seq) than the delete resurrects the cell. Within a batch
+    * mutations are sorted by (ts, seq) first, so this only matters for
+    * cross-batch out-of-order deletes — acceptable for WAL replay,
+    * where per-key order is preserved by the source. */
   def applyMutation(st: RowCells, m: Mutation): RowCells = {
     var cells = st.cells
-    var deleted = st.deleted
+    var putTs = st.putTs
+    var putSeq = st.putSeq
+    var tombTs = st.tombTs
+    var tombSeq = st.tombSeq
     m.cells.foreach { c: Cell =>
       val key = s"${c.family}:${c.qualifier}"
       c.kind match {
         case "delete_row" =>
-          cells = cells.filter { case (_, old) =>
-            old.ts > c.ts || (old.ts == c.ts && old.seq > m.seq) }
-          if (cells.isEmpty) deleted = true
+          cells = cells.filter { case (_, old) => after(old.ts, old.seq, c.ts, m.seq) }
+          if (after(c.ts, m.seq, tombTs, tombSeq)) { tombTs = c.ts; tombSeq = m.seq }
         case "delete" =>
           cells.get(key).foreach { old =>
             if (newer(c.ts, m.seq, old)) cells = cells - key
           }
         case _ => // put
-          val ok = cells.get(key).forall(old => newer(c.ts, m.seq, old))
+          val ok = after(c.ts, m.seq, tombTs, tombSeq) &&
+            cells.get(key).forall(old => newer(c.ts, m.seq, old))
           if (ok) {
             cells = cells + (key -> CellV(c.value, c.ts, m.seq))
-            deleted = false
+            if (after(c.ts, m.seq, putTs, putSeq)) { putTs = c.ts; putSeq = m.seq }
           }
       }
     }
-    st.copy(cells = cells, version = math.max(st.version, m.ts), deleted = deleted)
+    val tombstoned = !(tombTs == Never && tombSeq == Never)
+    st.copy(cells = cells, version = math.max(st.version, m.ts),
+      deleted = tombstoned && !after(putTs, putSeq, tombTs, tombSeq),
+      putTs = putTs, putSeq = putSeq, tombTs = tombTs, tombSeq = tombSeq)
   }
 
   private def rowState(key: (String, String), st: RowCells): RowState =
@@ -103,8 +123,8 @@ object RowMaterializer {
     *    `seen` map is emptied once every entry has expired;
     *  - emits nothing for a key whose batch held only replays.
     * [[ExactlyOnce]] states where this differs from the standalone
-    * dedupe. The state schema includes `seen`, so checkpoints written
-    * by the two-operator plan cannot be resumed.
+    * dedupe. The state schema includes `seen` and the row markers, so
+    * checkpoints written before either was added cannot be resumed.
     *
     * Any other input runs the same function under NoTimeout with an
     * empty `seen` map. */
@@ -177,16 +197,12 @@ object RowMaterializer {
   }
 
   /** Batch variant over a static mutation Dataset (same semantics;
-    * used for reprocessing/backfill). */
+    * used for reprocessing/backfill). Groups by the relational key
+    * like the streaming operators. */
   def materializeBatch(s: SparkSession, mutations: Dataset[Mutation]): Dataset[RowState] = {
     import s.implicits._
-    mutations
-      .groupByKey(m => (m.table, m.rowkey))
-      .mapGroups { (key, muts) =>
-        val st = muts.toSeq.sortBy(m => (m.ts, m.seq))
-          .foldLeft(RowCells(Map.empty, 0L, deleted = false))(applyMutation)
-        RowState(key._1, key._2,
-          st.cells.map { case (k, v) => k -> v.value }, st.version, st.deleted)
-      }
+    byRow(s, mutations.toDF()).mapGroups { (key, muts) =>
+      rowState(key, muts.toSeq.sortBy(m => (m.ts, m.seq)).foldLeft(Empty)(applyMutation))
+    }
   }
 }

@@ -3,13 +3,41 @@ package graft
 import graft.model.{Cell, Mutation, RowState}
 import graft.streaming.RowMaterializer
 import graft.streaming.RowMaterializer.RowCells
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
+import scala.collection.mutable
 
 class RowMaterializerSpec extends SparkSpec {
 
   private def put(seq: Long, ts: Long, row: String, qual: String, v: String) =
     Mutation(seq, ts, "t", row, Seq(Cell("f", qual, v, ts, "put")))
+  private def del(seq: Long, ts: Long, row: String, qual: String) =
+    Mutation(seq, ts, "t", row, Seq(Cell("f", qual, null, ts, "delete")))
+  private def tomb(seq: Long, ts: Long, row: String) =
+    Mutation(seq, ts, "t", row, Seq(Cell("f", "", null, ts, "delete_row")))
+
+  /** Each key's last state after streaming `batches` one micro-batch
+    * each through [[RowMaterializer.materialize]]. */
+  private def streamed(batches: Seq[Seq[Mutation]]): Set[RowState] = {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Mutation]
+    val out = mutable.ArrayBuffer.empty[RowState]
+    val q = RowMaterializer.materialize(spark, input.toDS()).writeStream
+      .outputMode("update")
+      .foreachBatch((df: Dataset[RowState], _: Long) => out.synchronized {
+        out ++= df.collect(); ()
+      }).start()
+    try batches.foreach { b => input.addData(b); q.processAllAvailable() }
+    finally q.stop()
+    out.groupBy(r => (r.table, r.rowkey)).values.map(_.last).toSet
+  }
+
+  private def batched(muts: Seq[Mutation]): Set[RowState] = {
+    import spark.implicits._
+    RowMaterializer.materializeBatch(spark, muts.toDS()).collect().toSet
+  }
 
   test("applyMutation: latest-cell-wins and out-of-order ignore") {
     val st0 = RowCells(Map.empty, 0L, deleted = false)
@@ -80,5 +108,35 @@ class RowMaterializerSpec extends SparkSpec {
     val out = RowMaterializer.materializeBatch(spark, muts.toDS()).collect()
     assert(out.length == 1)
     assert(out.head.cells == Map("f:a" -> "v2"))
+  }
+
+  test("a row tombstone older than a later qualifier delete leaves the row undeleted") {
+    // put@300 and delete@400 empty the row; the older row tombstone
+    // arrives in a later micro-batch
+    val batches = Seq(Seq(put(1, 300, "r1", "a", "v1"), del(2, 400, "r1", "a")),
+      Seq(tomb(3, 200, "r1")))
+    val want = batched(batches.flatten)
+    assert(want.map(r => (r.cells, r.version, r.deleted)) == Set((Map.empty, 400L, false)))
+    assert(streamed(batches) == want)
+    val st0 = RowCells(Map.empty, 0L, deleted = false)
+    assert(!batches.flatten.foldLeft(st0)(RowMaterializer.applyMutation).deleted)
+  }
+
+  test("a put older than the row tombstone, arriving later, is not applied") {
+    val batches = Seq(Seq(tomb(1, 500, "r1")), Seq(put(2, 300, "r1", "a", "v1")))
+    val want = batched(batches.flatten)
+    assert(want.map(r => (r.cells, r.version, r.deleted)) == Set((Map.empty, 500L, true)))
+    assert(streamed(batches) == want)
+  }
+
+  test("materializeBatch over q36's input ignores shuffle partitions and AQE") {
+    import spark.implicits._
+    def run(): Set[RowState] = RowMaterializer.materializeBatch(spark,
+      graft.sources.WalSource.eventsAsWal(spark, sfDir).as[Mutation]).collect().toSet
+    val results = for (parts <- Seq("1", "3"); aqe <- Seq("true", "false"))
+      yield withConf("spark.sql.shuffle.partitions" -> parts,
+        "spark.sql.adaptive.enabled" -> aqe)(run())
+    assert(results.head.nonEmpty && results.head.exists(_.deleted))
+    assert(results.forall(_ == results.head))
   }
 }

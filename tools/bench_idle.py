@@ -8,6 +8,9 @@ Usage:
   # refuses a loaded box), then aggregate
   python3 tools/bench_idle.py <round> <out.json> --sweep N [sf_dir]
 
+A sweep runs Bench at the caller's SPARK_GRAFT_CPUS, or at every core
+of the host when it is unset, and records that count as `cpus`.
+
 Each run file is the one-line JSON graft.Bench prints. Per-entry
 MINIMUM over the runs (the variance-robust estimator the round
 records use); entries missing from some runs (added mid-sequence)
@@ -30,7 +33,9 @@ def load(path):
     return json.loads(s[s.index("{"):])  # strip any sbt [info] prefix
 
 
-def main(rnd, out, runs):
+def main(rnd, out, runs, cpus=None):
+    """`cpus` is the SPARK_GRAFT_CPUS the sweeps ran with; None (runs
+    captured elsewhere) records it as unknown."""
     datas = [load(r) for r in runs]
     totals = [round(sum(v for v in d["queries"].values() if v >= 0), 1)
               for d in datas]
@@ -48,7 +53,7 @@ def main(rnd, out, runs):
     doc = {
         "round": rnd,
         "sf": datas[0].get("sf", 0.1),
-        "cpus": 32,
+        "cpus": cpus,
         "runs": len(datas),
         "totals_per_run_sec": totals,
         "method": (f"{len(datas)} full graft.Bench sweeps on an idle "
@@ -56,10 +61,13 @@ def main(rnd, out, runs):
                    + (f"Entries present in fewer runs (landed "
                       f"mid-sequence): {sorted(partial)}. " if partial
                       else "All entries present in every run. ")
-                   + "Bench sets stateStore.maintenanceInterval=5s "
-                     "(the round-8 streaming-variance mitigation) and "
-                     "cleans stale graft-owned tmpdirs at startup (the "
-                     "round-12 contamination fix)."),
+                   + (f"Bench ran at local[{cpus}] with {cpus} shuffle "
+                      "partitions. " if cpus else
+                      "Core count of the runs not recorded. ")
+                   + "Bench keeps the default state-store maintenance "
+                     "interval, calls StateStoreHooks.unloadAll() between "
+                     "entries and cleans stale graft-owned tmpdirs at "
+                     "startup."),
         "failed_entries": sorted(failed),
         "min_total_sec": round(sum(mins.values()), 2),
         "queries_min_sec": {n: mins[n] for n in sorted(mins)},
@@ -70,6 +78,7 @@ def main(rnd, out, runs):
 
 
 def sweep(rnd, out, n, sf_dir):
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
     runs = []
     for i in range(1, n + 1):
         load1 = os.getloadavg()[0]
@@ -82,7 +91,7 @@ def sweep(rnd, out, n, sf_dir):
         out_dir = os.path.dirname(os.path.abspath(out)) or "."
         path = os.path.join(out_dir, f"bench_idle_r{rnd}_run{i}.json")
         env = dict(os.environ,
-                   SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_CPUS="32")
+                   SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_CPUS=cpus)
         t0 = time.time()
         p = subprocess.run(
             ["sbt", "-batch", "runMain graft.Bench"],
@@ -97,7 +106,7 @@ def sweep(rnd, out, n, sf_dir):
         open(path, "w").write(line + "\n")
         runs.append(path)
         print(f"run {i}/{n}: {time.time()-t0:.0f}s wall -> {path}")
-    main(rnd, out, runs)
+    main(rnd, out, runs, int(cpus))
 
 
 if __name__ == "__main__":
