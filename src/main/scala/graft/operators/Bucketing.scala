@@ -23,7 +23,6 @@ object Bucketing {
     * the raw parquet: layout must never change results. */
   def bucketedJoin(s: SparkSession, dir: String): DataFrame = {
     val stage = StreamingOps.stagingRoot("q82", dir)
-    s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "true")
     Tables.orders(s, dir).write
       .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
       .option("path", s"$stage/orders_b")
@@ -373,15 +372,8 @@ object Bucketing {
     * so PlanSpec can pin the DynamicPruningExpression on the scan
     * (run [[dynamicPartitionPruning]] first to stage; this resolves
     * the SAME path WITHOUT stagingRoot's fresh-start delete). */
-  private[graft] def dppStagedJoin(s: SparkSession, dir: String): DataFrame = {
-    val dirKey = java.security.MessageDigest.getInstance("MD5")
-      .digest(java.nio.file.Paths.get(dir).toAbsolutePath.toString
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    val stage = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft-q258-$dirKey").toString
-    dppJoined(s, dir, s"$stage/events_p")
-  }
+  private[graft] def dppStagedJoin(s: SparkSession, dir: String): DataFrame =
+    dppJoined(s, dir, s"${StreamingOps.stagingPath("q258", dir)}/events_p")
 
   private def dppJoined(s: SparkSession, dir: String,
       factPath: String): DataFrame = {

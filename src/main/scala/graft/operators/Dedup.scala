@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import graft.Tables
 import graft.functions.TextFunctions._
 
@@ -944,18 +945,12 @@ object Dedup {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("text",
         org.apache.spark.sql.types.StringType)))
-    StreamingOps.runAdaptive(s, stage,
-      s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 2).json(inDir)
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        dedupIndexBatch(s, stateRoot, df, id, compactEvery)
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
-      // r18: md5-banding per batch — CPU-bound, see runAdaptive
-      workFactor = 256L)
+    // md5 banding per batch is CPU-bound: see StreamGate's sizing
+    StreamGate.run(s,
+        s.readStream.schema(schema).option("maxFilesPerTrigger", 2).json(inDir),
+        ckpt, OutputMode.Append(), workFactor = 256L) { (df, id) =>
+      dedupIndexBatch(s, stateRoot, df, id, compactEvery)
+    }
   }
 
   /** Assemble the q326 verdict report from the match-evidence store:
@@ -3056,7 +3051,7 @@ object Dedup {
 
   /** Stage + drain the q412 stream: publish the base (even doc_id)
     * gram index, stream the odd docs as a 6-file JSONL source, and
-    * drain with a foreachBatch AvailableNow query over a checkpoint
+    * drain it through [[StreamGate.run]] over a checkpoint
     * (compaction mid-stream at the default cadence). */
   private[graft] def runStreamExactSubstr(s: SparkSession, dir: String,
       stage: String, k: Int, compactEvery: Int = 3): Unit = {
@@ -3073,18 +3068,12 @@ object Dedup {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("text",
         org.apache.spark.sql.types.StringType)))
-    StreamingOps.runAdaptive(s, stage,
-      s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 2).json(inDir)
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        exactSubstrIndexBatch(s, stateRoot, df, id, k, compactEvery)
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
-      // r18: positional-gram explode per batch — CPU-bound
-      workFactor = 256L)
+    // the positional-gram explode per batch is CPU-bound
+    StreamGate.run(s,
+        s.readStream.schema(schema).option("maxFilesPerTrigger", 2).json(inDir),
+        ckpt, OutputMode.Append(), workFactor = 256L) { (df, id) =>
+      exactSubstrIndexBatch(s, stateRoot, df, id, k, compactEvery)
+    }
   }
 
   /** q412: STREAMING ExactSubstr under the oracle gate — the q384

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import graft.Tables
 
 /** Multimodal column plumbing (SURVEY §2.F).
@@ -1304,8 +1305,8 @@ object Multimodal {
 
   /** q419: STREAMING WAV DECODE under the oracle gate — q409's
     * per-blob decode run as a structured stream over the staged
-    * media files (maxFilesPerTrigger batches through foreachBatch),
-    * each batch appending its decoded stats; the final table must
+    * media files (8 files per micro-batch), each batch appending
+    * its decoded stats; the final table must
     * EQUAL batch q409 (same oracle SQL — the q401 argument: stats
     * are a pure per-blob function, so the streamed result is
     * batching- and replay-invariant, with replay duplicates
@@ -1317,26 +1318,23 @@ object Multimodal {
     val media = stageWavMedia(s, dir, "q419m")
     val stage = StreamingOps.stagingRoot("q419", dir)
     val out = s"$stage/out"; val ckpt = s"$stage/ckpt"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stage))
-    val mediaSchema = s.read.parquet(media).schema
-    StreamingOps.runAdaptive(s, stage,
-      s.readStream.schema(mediaSchema)
-      .option("maxFilesPerTrigger", 8).parquet(media)
-      .writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        df.as[BlobRow].mapPartitions { rows =>
-          rows.map { r =>
-            val (rate, ch, fr, sum, sumSq, zc) = wavStatsOf(r.blob)
-            (r.doc_id, rate, ch, fr, sum, sumSq, zc)
-          }
-        }.toDF("doc_id", "sample_rate", "n_channels", "n_frames",
-          "sum_samples", "sum_sq", "zero_cross_ch0")
-          .write.mode("append").parquet(out)
-        ()
+    val stats = mediaStream(s, media).mapPartitions { rows =>
+      rows.map { r =>
+        val (rate, ch, fr, sum, sumSq, zc) = wavStatsOf(r.blob)
+        (r.doc_id, rate, ch, fr, sum, sumSq, zc)
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-    s.read.parquet(out).distinct()
+    }.toDF("doc_id", "sample_rate", "n_channels", "n_frames",
+      "sum_samples", "sum_sq", "zero_cross_ch0")
+    StreamGate.toParquet(s, stats, ckpt, out, OutputMode.Append()).distinct()
+  }
+
+  /** A staged (doc_id, blob) media archive as a stream of 8 files per
+    * micro-batch. */
+  private def mediaStream(s: SparkSession, media: String)
+      : Dataset[BlobRow] = {
+    import s.implicits._
+    s.readStream.schema(s.read.parquet(media).schema)
+      .option("maxFilesPerTrigger", 8).parquet(media).as[BlobRow]
   }
 
   /** Encode one channel-0 sample array as a real mono RIFF/WAVE blob
@@ -1718,7 +1716,7 @@ object Multimodal {
 
   /** q432: STREAMING Y4M DECODE under the oracle gate — q429's
     * per-blob decode run as a structured stream over the staged
-    * media (maxFilesPerTrigger batches through foreachBatch), final
+    * media (8 files per micro-batch), final
     * table ≡ batch q429 (same oracle SQL — the q419 argument: decode
     * stats are a pure per-blob function, so the streamed result is
     * batching- and replay-invariant, replay duplicates identical
@@ -1730,38 +1728,26 @@ object Multimodal {
     val media = stageY4mMedia(s, dir, "q432m")
     val stage = StreamingOps.stagingRoot("q432", dir)
     val out = s"$stage/out"; val ckpt = s"$stage/ckpt"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stage))
-    val mediaSchema = s.read.parquet(media).schema
-    StreamingOps.runAdaptive(s, stage,
-      s.readStream.schema(mediaSchema)
-      .option("maxFilesPerTrigger", 8).parquet(media)
-      .writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        df.as[BlobRow].map { r =>
-          val a = y4mParse(r.blob)
-          var ySum = 0L; var ySumSq = 0L
-          var yMin = 255L; var yMax = 0L
-          a.luma.foreach { fr =>
-            var i = 0
-            while (i < fr.length) {
-              val v = fr(i).toLong
-              ySum += v; ySumSq += v * v
-              if (v < yMin) yMin = v
-              if (v > yMax) yMax = v
-              i += 1
-            }
-          }
-          (r.doc_id, a.width.toLong, a.height.toLong,
-            a.luma.length.toLong, a.fpsNum.toLong, ySum, ySumSq,
-            yMin, yMax, a.uSum, a.vSum)
-        }.toDF("doc_id", "width", "height", "n_frames", "fps_num",
-          "y_sum", "y_sum_sq", "y_min", "y_max", "u_sum", "v_sum")
-          .write.mode("append").parquet(out)
-        ()
+    val stats = mediaStream(s, media).map { r =>
+      val a = y4mParse(r.blob)
+      var ySum = 0L; var ySumSq = 0L
+      var yMin = 255L; var yMax = 0L
+      a.luma.foreach { fr =>
+        var i = 0
+        while (i < fr.length) {
+          val v = fr(i).toLong
+          ySum += v; ySumSq += v * v
+          if (v < yMin) yMin = v
+          if (v > yMax) yMax = v
+          i += 1
+        }
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-    s.read.parquet(out).distinct()
+      (r.doc_id, a.width.toLong, a.height.toLong,
+        a.luma.length.toLong, a.fpsNum.toLong, ySum, ySumSq,
+        yMin, yMax, a.uSum, a.vSum)
+    }.toDF("doc_id", "width", "height", "n_frames", "fps_num",
+      "y_sum", "y_sum_sq", "y_min", "y_max", "u_sum", "v_sum")
+    StreamGate.toParquet(s, stats, ckpt, out, OutputMode.Append()).distinct()
   }
 
   /** Temporal luma fingerprint of one parsed asset: per consecutive
@@ -1911,22 +1897,12 @@ object Multimodal {
     val media = stageVideoTwinMedia(s, dir, "q435m")
     val stage = StreamingOps.stagingRoot("q435", dir)
     val store = s"$stage/store"; val ckpt = s"$stage/ckpt"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stage))
-    val mediaSchema = s.read.parquet(media).schema
-    StreamingOps.runAdaptive(s, stage,
-      s.readStream.schema(mediaSchema)
-      .option("maxFilesPerTrigger", 8).parquet(media)
-      .writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        df.as[BlobRow].mapPartitions { rows =>
-            rows.map(r => (r.doc_id, temporalBits(y4mParse(r.blob))))
-          }.toDF("doc_id", "bits")
-          .write.mode("append").parquet(store)
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-    videoNearDupOf(s.read.parquet(store).distinct(), maxHam)
+    val fps = mediaStream(s, media).mapPartitions { rows =>
+      rows.map(r => (r.doc_id, temporalBits(y4mParse(r.blob))))
+    }.toDF("doc_id", "bits")
+    videoNearDupOf(
+      StreamGate.toParquet(s, fps, ckpt, store, OutputMode.Append()).distinct(),
+      maxHam)
   }
 
   /** q448: PER-SHOT VIDEO STATS — q431's cut detector composed into

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import graft.Tables
 
 /** Similarity search over the embeddings table (SURVEY §2.D).
@@ -1428,17 +1429,16 @@ object Similarity {
   /** Stage + drain the q385 stream: publish the base (even vec_id)
     * index, write the delta (odd vec_id) QUANTIZED vectors as a
     * 6-file JSONL stream (fixed-point longs survive the JSON round
-    * trip exactly; raw floats would not), and drain it with a
-    * foreachBatch AvailableNow query over a checkpoint. */
+    * trip exactly; raw floats would not), and drain it through
+    * [[StreamGate.run]] over a checkpoint. */
   private[graft] def runStreamIvf(s: SparkSession, dir: String,
       stage: String, compactEvery: Int = 3): Unit = {
     import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
     val stateRoot = s"$stage/state"
     val inDir = s"$stage/in"; val ckpt = s"$stage/ckpt"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stateRoot))
-    // r18 (guide §1.2): pin the quantized frame — it feeds BOTH the
-    // base-index build (even split) and the delta JSONL staging
-    // (odd split); un-pinned, the scan + quantize ran twice.
+    // pin the quantized frame: it feeds BOTH the base-index build
+    // (even split) and the delta JSONL staging (odd split)
     val embQ = quantizedL(s, dir).localCheckpoint()
     initIvfIndex(s, stateRoot, embQ.filter(col("vec_id") % 2 === 0))
     embQ.filter(col("vec_id") % 2 =!= 0).select(col("vec_id"), col("v"))
@@ -1446,18 +1446,12 @@ object Similarity {
       .write.mode("overwrite").text(inDir)
     val schema = StructType(Seq(StructField("vec_id", LongType),
       StructField("v", ArrayType(LongType))))
-    StreamingOps.runAdaptive(s, stage,
-      s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 2).json(inDir)
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        ivfIndexBatch(s, stateRoot, df, id, compactEvery)
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
-      // r18: 64-centroid integer-dot assignment per batch — CPU-bound
-      workFactor = 256L)
+    // the 64-centroid integer-dot assignment per batch is CPU-bound
+    StreamGate.run(s,
+        s.readStream.schema(schema).option("maxFilesPerTrigger", 2).json(inDir),
+        ckpt, OutputMode.Append(), workFactor = 256L) { (df, id) =>
+      ivfIndexBatch(s, stateRoot, df, id, compactEvery)
+    }
   }
 
   /** q385: STREAMING IVF-index maintenance under the oracle gate —

@@ -1,23 +1,24 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import graft.model.{Mutation, RowState}
+import org.apache.spark.sql.streaming.OutputMode
+import graft.model.Mutation
 import graft.sources.WalSource
 import graft.streaming.RowMaterializer
 
 /** Batch-replayable wrappers that put the STREAMING SEP core — DSv2
   * WAL source → stateful row materializer — under the driver's DuckDB
-  * oracle gate (SURVEY §2.G was previously ScalaTest-only).
+  * oracle gate. Each gate stages its input under [[stagingRoot]] and
+  * starts, waits and reads back through [[StreamGate]].
   */
 object StreamingOps {
 
   /** q53: end-to-end streaming CDC materialization. Stages the events
     * table as JSONL WAL segments, consumes them through the custom
-    * "graft-wal" MicroBatchStream with Trigger.AvailableNow (4
-    * micro-batches of 2 segments — checkpointed, stateful,
-    * admission-controlled), folds them in
+    * "graft-wal" MicroBatchStream to exhaustion (4 micro-batches of
+    * 2 segments — checkpointed, stateful, admission-controlled),
+    * folds them in
     * [[RowMaterializer.materialize]], and emits each key's final row
     * state as scalar columns.
     *
@@ -43,17 +44,9 @@ object StreamingOps {
       out, ckpt)
   }
 
-  /** Bounded staging root for the streaming gate queries: one fixed
-    * dir per (query tag, input dir), wiped at entry — repeated bench
-    * warm-up/timed/verify runs reuse the same space instead of
-    * accumulating a WAL copy per invocation. Keyed on an md5 digest
-    * of the absolute input path (String.hashCode collides too easily
-    * to key a wipe-then-write space); assumes a single runner per
-    * input dir per host — concurrent JVMs verifying the same dir
-    * would need per-run unique dirs. */
-  /** The per-sfDir staging-key suffix stagingRoot embeds in its
-    * directory names — exposed so specs can re-resolve a staged path
-    * without re-staging (and without the fresh-start delete). */
+  /** The md5 key of an input dir's absolute path that names its
+    * staging dirs (see [[stagingRoot]]). String.hashCode collides too
+    * easily to key a wipe-then-write space. */
   private[graft] def dirKey(dir: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(java.nio.file.Paths.get(dir).toAbsolutePath.toString
@@ -90,49 +83,11 @@ object StreamingOps {
     }
   }
 
-  /** r17 optimization (guide §2.2/§2.5): run a streaming gate with
-    * SCALE-ADAPTIVE shuffle/state partitioning — partitions =
-    * ceil(staged input bytes / 32 MB), clamped to [1, the session's
-    * setting]. AQE never applies to streaming plans, so a stateful
-    * query otherwise commits one state-store instance per SESSION
-    * shuffle partition per micro-batch regardless of input size —
-    * measured on this host at ~30 ms per partition per batch, i.e.
-    * a local-scale WAL paid ~1 s/batch of pure store-commit overhead
-    * at 32 partitions for kilobytes of state. A cluster-scale input
-    * hits the clamp's upper bound and keeps the session's
-    * cluster-sized setting, so this is the input-derived sizing the
-    * optimization guide prescribes, not a local-mode constant. The
-    * session value is restored on every exit path; every gate's
-    * result is partition-count-invariant by the house
-    * oracle-replayability rule and re-gated by full DuckDB parity.
-    * `sizedDir` is the gate's staging root, measured AFTER the WAL
-    * is staged and BEFORE the stream starts.
-    *
-    * r18 (VERDICT r17 "Next #3"): `workFactor` is the gate's
-    * measured per-byte CPU-work multiplier, 1 for the state-bound
-    * gates the r17 sizing was derived from. The md5-banding /
-    * gram-explode / codec-decode gates (q326/q327/q412/q435, the
-    * IVF assign q385) do 10²–10³ bytes of hashing or decode work
-    * per staged byte, and the r17 driver bench showed the plain
-    * bytes/32 MB sizing SERIALIZED them (q326 7.4→9.6 s, q327
-    * 6.2→9.9 s, q412 7.0 s, q435 9.5 s — all slower than their
-    * pre-r17 session-sized runs): one size did not fit all 41
-    * gates. Sizing by bytes × workFactor keeps the formula
-    * input-derived — a cluster-scale stage still clamps to the
-    * session setting, a tiny warm-up SF still gets 1 partition. */
-  private[graft] def runAdaptive(s: SparkSession, sizedDir: String,
-      w: org.apache.spark.sql.streaming.DataStreamWriter[_],
-      workFactor: Long = 1L): Unit = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    val target = 32L << 20
-    val parts = math.max(1L, math.min(prev.toLong,
-      (dirBytes(sizedDir) * workFactor + target - 1) / target))
-    s.conf.set(key, parts.toString)
-    try { val q = w.start(); q.awaitTermination() }
-    finally s.conf.set(key, prev)
-  }
-
+  /** Bounded staging root for a gate: one fixed dir per (query tag,
+    * input dir), wiped at entry, so repeated bench warm-up, timed and
+    * verify runs reuse the same space instead of accumulating a WAL
+    * copy per invocation. Assumes a single runner per input dir per
+    * host: concurrent JVMs on the same dir would need per-run dirs. */
   private[operators] def stagingRoot(tag: String, dir: String): String = {
     val stagePath = java.nio.file.Paths.get(stagingPath(tag, dir))
     if (java.nio.file.Files.exists(stagePath)) {
@@ -161,15 +116,7 @@ object StreamingOps {
       .withColumn("value", col("cells")(0)("value").cast("double"))
       .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-    runAdaptive(s, stage,
-      counts.writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        df.write.mode("overwrite").parquet(out)
-      }
-      .outputMode("complete")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
-    s.read.parquet(out)
+    StreamGate.toParquet(s, counts, ckpt, out, OutputMode.Complete())
       .select(unix_micros(col("window.start")).as("window_start"),
         col("event_type"), col("n"), round(col("sum_value"), 2).as("sum_value"))
   }
@@ -195,15 +142,8 @@ object StreamingOps {
       .withColumn("event_time", timestamp_micros(col("ts")))
       .groupBy(col("rowkey"), session_window(col("event_time"), "30 minutes"))
       .agg(count(lit(1)).as("n"))
-    runAdaptive(s, stage,
-      sessions.writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        df.select(col("rowkey"), col("n")).write.mode("overwrite").parquet(out)
-      }
-      .outputMode("complete")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
-    s.read.parquet(out)
+      .select(col("rowkey"), col("n"))
+    StreamGate.toParquet(s, sessions, ckpt, out, OutputMode.Complete())
       .groupBy(col("rowkey").cast("long").as("user_id"))
       .agg(count(lit(1)).as("n_sessions"), sum(col("n")).as("n_events"))
   }
@@ -245,15 +185,7 @@ object StreamingOps {
         col("click_time") >= col("purchase_time") - expr("INTERVAL 1 HOUR") &&
         col("click_time") <= col("purchase_time"))
       .select(col("rowkey"), col("purchase_seq"), col("click_seq"))
-    runAdaptive(s, stage,
-      joined.writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        df.write.mode("append").parquet(out)
-      }
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
-    s.read.parquet(out)
+    StreamGate.toParquet(s, joined, ckpt, out, OutputMode.Append())
       // idempotence under any foreachBatch retry/replay
       .dropDuplicates("purchase_seq", "click_seq")
       .groupBy(col("rowkey").cast("long").as("user_id"))
@@ -281,15 +213,7 @@ object StreamingOps {
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_mutations"),
         sum(size(col("cells")).cast("long")).as("n_cells"))
-    runAdaptive(s, stage,
-      counts.writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        df.write.mode("overwrite").parquet(out)
-      }
-      .outputMode("complete")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
-    s.read.parquet(out)
+    StreamGate.toParquet(s, counts, ckpt, out, OutputMode.Complete())
   }
 
   /** q86: STREAMING effectively-once under the oracle gate — the WAL
@@ -312,15 +236,7 @@ object StreamingOps {
         WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2))
       .groupBy(col("table"), col("rowkey"))
       .agg(count(lit(1)).as("n"))
-    runAdaptive(s, stage,
-      perKey.writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        df.write.mode("overwrite").parquet(out)
-      }
-      .outputMode("complete")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
-    s.read.parquet(out)
+    StreamGate.toParquet(s, perKey, ckpt, out, OutputMode.Complete())
       .groupBy(col("table"))
       .agg(sum(col("n")).as("n_mutations"), count(lit(1)).as("n_keys"))
   }
@@ -464,22 +380,18 @@ object StreamingOps {
     * tracks the source offsets; the registry tracks the CONSUMER
     * position q263 reports on — the two-level progress model of the
     * reference (ZK subscription state + per-peer replication
-    * position). Runs Trigger.AvailableNow to completion. */
+    * position). Runs to the end of the WAL. */
   def consumeAndAck(s: SparkSession, wal: graft.sources.WalStream,
       reg: graft.streaming.SubscriptionRegistry, name: String, ckpt: String)
       (process: DataFrame => Unit = _ => ()): Unit = {
     val sub = reg.list().find(_.name == name).getOrElse(
       throw new IllegalArgumentException(s"unknown subscription: $name"))
-    runAdaptive(s, new java.io.File(ckpt).getParent,
-      sub(wal.open(s)).writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          process(batch)
-          val mx = batch.agg(max(col("seq"))).head()
-          if (!mx.isNullAt(0)) reg.ack(name, mx.getLong(0))
-        }
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()))
+    StreamGate.run(s, sub(wal.open(s)), ckpt, OutputMode.Append()) {
+      (batch, _) =>
+        process(batch)
+        val mx = batch.agg(max(col("seq"))).head()
+        if (!mx.isNullAt(0)) reg.ack(name, mx.getLong(0))
+    }
   }
 
   /** q269: STREAMING DEBOUNCE under the oracle gate — q267's
@@ -501,16 +413,8 @@ object StreamingOps {
         col("cells")(0)("qualifier").as("kind"),
         col("ts"), col("seq").as("id"))
       .as[graft.streaming.Debounce.Ev]
-    runAdaptive(s, stage,
-      graft.streaming.Debounce.track(s, evs, gapMicros).writeStream
-      .foreachBatch {
-        (df: Dataset[graft.streaming.Debounce.Out], id: Long) =>
-          df.withColumn("batch", lit(id)).write.mode("append").parquet(out)
-      }
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
-    s.read.parquet(out)
+    StreamGate.toParquet(s, graft.streaming.Debounce.track(s, evs, gapMicros),
+      ckpt, out, OutputMode.Update())
       .groupBy(col("user"), col("kind"))
       .agg(max_by(struct(col("n_events"), col("n_dropped")), col("batch"))
         .as("st"))
@@ -542,16 +446,8 @@ object StreamingOps {
         expr("cast(round(cast(cells[0].value as double) * 100) as bigint)")
           .as("value_cents"))
       .as[graft.streaming.MaxVersions.Cell]
-    runAdaptive(s, stage,
-      graft.streaming.MaxVersions.track(s, cells, k).writeStream
-      .foreachBatch {
-        (df: Dataset[graft.streaming.MaxVersions.Out], id: Long) =>
-          df.withColumn("batch", lit(id)).write.mode("append").parquet(out)
-      }
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
-    s.read.parquet(out)
+    StreamGate.toParquet(s, graft.streaming.MaxVersions.track(s, cells, k),
+      ckpt, out, OutputMode.Update())
       .groupBy(col("user"), col("qualifier"), col("version"))
       .agg(max_by(struct(col("ts"), col("value_cents"), col("seq")),
         col("batch")).as("st"))
@@ -590,15 +486,7 @@ object StreamingOps {
       .agg(min(col("d")).as("cohort"),
         expr("bit_or(shiftleft(cast(1 as bigint), cast(d as int)))")
           .as("mask"))
-    runAdaptive(s, stage,
-      masks.writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        df.withColumn("batch", lit(id)).write.mode("append").parquet(out)
-      }
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
-    val fin = s.read.parquet(out)
+    val fin = StreamGate.toParquet(s, masks, ckpt, out, OutputMode.Update())
       .groupBy(col("user_id"))
       .agg(max_by(struct(col("cohort"), col("mask")), col("batch")).as("st"))
       .select(col("st.cohort").as("cohort"), col("st.mask").as("mask"))
@@ -628,15 +516,7 @@ object StreamingOps {
         Sampling.hashBucket(concat(lit("kmv|"), col("rowkey"))).as("h"))
       .groupBy(col("qualifier"))
       .agg(graft.functions.KMin.kmin(k)(col("h")).as("kmv"))
-    runAdaptive(s, stage,
-      sketches.writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        df.withColumn("batch", lit(id)).write.mode("append").parquet(out)
-      }
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
-    val fin = s.read.parquet(out)
+    val fin = StreamGate.toParquet(s, sketches, ckpt, out, OutputMode.Update())
       .groupBy(col("qualifier"))
       .agg(max_by(col("kmv"), col("batch")).as("kmv"))
     val exact = graft.Tables.events(s, dir)
@@ -688,16 +568,8 @@ object StreamingOps {
           .as("c"))
       .groupBy(col("qualifier"))
       .agg(kll(col("c")).as("sk"))
-    runAdaptive(s, stage,
-      sketches.writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        df.withColumn("batch", lit(id)).write.mode("append").parquet(out)
-      }
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
     // metadata-sized collect: one sketch row per event type
-    val fin = s.read.parquet(out)
+    val fin = StreamGate.toParquet(s, sketches, ckpt, out, OutputMode.Update())
       .groupBy(col("qualifier"))
       .agg(max_by(col("sk"), col("batch")).as("sk"))
       .collect()
@@ -807,16 +679,8 @@ object StreamingOps {
       .select(col("rowkey").as("_1"),
         col("cells")(0)("qualifier").as("_2"), col("ts").as("_3"))
       .as[(String, String, Long)]
-    runAdaptive(s, stage,
-      graft.streaming.Funnel.track(s, evs).writeStream
-      .foreachBatch {
-        (df: Dataset[graft.streaming.Funnel.FunnelOut], id: Long) =>
-          df.withColumn("batch", lit(id)).write.mode("append").parquet(out)
-      }
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
-    s.read.parquet(out)
+    StreamGate.toParquet(s, graft.streaming.Funnel.track(s, evs),
+      ckpt, out, OutputMode.Update())
       .groupBy(col("user_id"))
       .agg(max_by(struct(col("first_view"), col("conv_ts")), col("batch")).as("st"))
       .select(col("user_id").cast("long").as("user_id"),
@@ -869,15 +733,7 @@ object StreamingOps {
           col("click_time") <= col("purchase_time"),
         "leftOuter")
       .select(col("rowkey"), col("purchase_seq"), col("click_seq"))
-    runAdaptive(s, stage,
-      joined.writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        df.write.mode("append").parquet(out)
-      }
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
-    s.read.parquet(out)
+    StreamGate.toParquet(s, joined, ckpt, out, OutputMode.Append())
       .dropDuplicates("purchase_seq", "click_seq")
       .groupBy(col("rowkey").cast("long").as("user_id"))
       .agg(countDistinct(col("purchase_seq")).as("n_purchases"),
@@ -926,15 +782,7 @@ object StreamingOps {
         "fullOuter")
       .select(coalesce(col("rowkey"), col("c_rowkey")).as("user_key"),
         col("purchase_seq"), col("click_seq"))
-    runAdaptive(s, stage,
-      joined.writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        df.write.mode("append").parquet(out)
-      }
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
-    s.read.parquet(out)
+    StreamGate.toParquet(s, joined, ckpt, out, OutputMode.Append())
       // idempotence under any foreachBatch retry/replay; null seqs
       // (outer rows) keep one row per (purchase, click) identity
       .dropDuplicates("purchase_seq", "click_seq")
@@ -970,15 +818,7 @@ object StreamingOps {
       .withColumn("value", col("cells")(0)("value").cast("double"))
       .groupBy(window(col("event_time"), "1 day"))
       .agg(TopK.topk(k)(col("seq"), col("value")).as("top"))
-    runAdaptive(s, stage,
-      tops.writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        df.write.mode("overwrite").parquet(out)
-      }
-      .outputMode("complete")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
-    s.read.parquet(out)
+    StreamGate.toParquet(s, tops, ckpt, out, OutputMode.Complete())
       .select(unix_micros(col("window.start")).as("window_start"),
         posexplode(col("top")).as(Seq("pos", "t")))
       .select(col("window_start"), (col("pos") + 1).cast("long").as("rank"),
@@ -1023,18 +863,11 @@ object StreamingOps {
       .withColumn("event_time", timestamp_micros(col("ts")))
       .withWatermark("event_time", "0 seconds")
       .as[graft.streaming.Funnel.FunnelEvent]
-    runAdaptive(s, stage,
-      graft.streaming.Funnel.trackWithTTL(s, evs, ttlMillis).writeStream
-      .foreachBatch {
-        (df: Dataset[graft.streaming.Funnel.FunnelOut], id: Long) =>
-          df.withColumn("batch", lit(id)).write.mode("append").parquet(out)
-      }
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
     // all data lands in batch 0, so any later emission is a flush:
     // evicted = touched by a timeout batch
-    s.read.parquet(out)
+    StreamGate.toParquet(s,
+      graft.streaming.Funnel.trackWithTTL(s, evs, ttlMillis),
+      ckpt, out, OutputMode.Update())
       .groupBy(col("user_id"))
       .agg(max_by(struct(col("first_view"), col("conv_ts")), col("batch")).as("st"),
         max(col("batch")).as("mb"))
@@ -1066,15 +899,7 @@ object StreamingOps {
     val counts = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
       .groupBy(col("rowkey"))
       .agg(typeCounts.head, typeCounts.tail: _*)
-    runAdaptive(s, stage,
-      counts.writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        df.write.mode("overwrite").parquet(out)
-      }
-      .outputMode("complete")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
-    s.read.parquet(out)
+    StreamGate.toParquet(s, counts, ckpt, out, OutputMode.Complete())
       .select(col("rowkey").cast("long").as("user_id") +:
         types.map(t => col(t)): _*)
   }
@@ -1099,15 +924,9 @@ object StreamingOps {
       .select(col("cells")(0)("qualifier").as("event_type"),
         col("rowkey").as("k"))
     val regs = Sketch.hllRegistersBy(keyed, "event_type")
-    runAdaptive(s, stage,
-      regs.writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        df.write.mode("overwrite").parquet(out)
-      }
-      .outputMode("complete")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
-    val est = Sketch.hllEstimate(s.read.parquet(out), "event_type")
+    val est = Sketch.hllEstimate(
+      StreamGate.toParquet(s, regs, ckpt, out, OutputMode.Complete()),
+      "event_type")
     val exact = graft.Tables.events(s, dir)
       .groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("n_exact"))
@@ -1191,7 +1010,7 @@ object StreamingOps {
     * latest-wins per key makes the sink idempotent per batch. */
   def streamUpsertView(s: SparkSession, dir: String): DataFrame = {
     val stage = stagingRoot("q140", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"
+    val walDir = s"$stage/wal"
     WalSource.writeWalJson(WalSource.eventsAsWal(s, dir), walDir, batches = 8)
     val totals = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
       .select(col("rowkey").cast("long").as("user_id"),
@@ -1199,25 +1018,29 @@ object StreamingOps {
         round(col("cells")(0)("value").cast("double") * 100).cast("long").as("cents"))
       .groupBy(col("user_id"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("sum_cents"))
-    runAdaptive(s, stage,
-      totals.writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        val touched = df // update mode: only keys changed this batch
+    upsertView(s, stage, totals, keep = lit(true))
+  }
+
+  /** Drain the update-mode `totals` into the [[publishView]] view under
+    * `stage`: each batch's touched (user_id, event_type) keys replace
+    * their old rows, rows failing `keep` are dropped, and the final
+    * view is read back with the stream's schema. */
+  private def upsertView(s: SparkSession, stage: String, totals: DataFrame,
+      keep: Column): DataFrame = {
+    StreamGate.run(s, totals, s"$stage/ckpt", OutputMode.Update()) {
+      (touched, id) =>
         val merged = currentViewDir(stage) match {
           case Some(cur) =>
-            s.read.parquet(cur)
+            s.read.schema(totals.schema).parquet(cur)
               .join(touched.select(col("user_id"), col("event_type")),
                 Seq("user_id", "event_type"), "left_anti")
               .unionByName(touched)
           case None => touched
         }
-        publishView(stage, merged, id)
-      }
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
-    s.read.parquet(currentViewDir(stage).getOrElse(
-      sys.error("q140: no view version published")))
+        publishView(stage, merged.filter(keep), id)
+    }
+    s.read.schema(totals.schema).parquet(currentViewDir(stage).getOrElse(
+      sys.error(s"$stage: no view version published")))
   }
 
   /** q299: STREAMING RETRACTION IVM (round-10, VERDICT Next #4) —
@@ -1320,7 +1143,7 @@ object StreamingOps {
     * at small SF. */
   private[graft] def streamIvmRetractOf(s: SparkSession, stage: String,
       mutations: DataFrame): DataFrame = {
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"
+    val walDir = s"$stage/wal"
     WalSource.writeWalJson(mutations, walDir, batches = 8)
     val mult = when(col("cells")(0)("kind") === "delete", -1L).otherwise(1L)
     val totals = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
@@ -1332,30 +1155,13 @@ object StreamingOps {
       .groupBy(col("user_id"), col("event_type"))
       .agg(sum(col("mult")).as("n_events"),
         sum(col("signed_cents")).as("sum_cents"))
-    runAdaptive(s, stage,
-      totals.writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        val touched = df // update mode: only keys changed this batch
-        val merged = (currentViewDir(stage) match {
-          case Some(cur) =>
-            s.read.parquet(cur)
-              .join(touched.select(col("user_id"), col("event_type")),
-                Seq("user_id", "event_type"), "left_anti")
-              .unionByName(touched)
-          case None => touched
-        }).filter(col("n_events") > 0L) // Z-relation: zero support → tombstone
-        publishView(stage, merged, id)
-      }
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
-    s.read.parquet(currentViewDir(stage).getOrElse(
-      sys.error("q299: no view version published")))
+    // Z-relation: a group whose support hits zero is a sink tombstone
+    upsertView(s, stage, totals, keep = col("n_events") > 0L)
   }
 
   /** Run any [[graft.sources.WalStream]] transport to exhaustion
-    * (Trigger.AvailableNow) through the stateful materializer and
-    * return each key's FINAL row state as scalar columns. Update mode
+    * through the stateful materializer and return each key's FINAL
+    * row state as scalar columns. Update mode
     * emits a state row per touched key per micro-batch; the final
     * state is the row from the last batch touching the key.
     *
@@ -1383,20 +1189,13 @@ object StreamingOps {
       case None =>
         RowMaterializer.materialize(s, wal.open(s).as[Mutation])
     }
-    try runAdaptive(s, new java.io.File(ckpt).getParent,
-      states.writeStream
-        .foreachBatch { (df: Dataset[RowState], id: Long) =>
-          df.withColumn("batch", lit(id)).write.mode("append").parquet(out)
-        }
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()))
-    finally if (rocksDB) prior match {
-      case Some(v) => s.conf.set(providerKey, v)
-      case None => s.conf.unset(providerKey)
-    }
-    s.read.parquet(out)
-      .groupBy(col("table"), col("rowkey"))
+    val emitted =
+      try StreamGate.toParquet(s, states, ckpt, out, OutputMode.Update())
+      finally if (rocksDB) prior match {
+        case Some(v) => s.conf.set(providerKey, v)
+        case None => s.conf.unset(providerKey)
+      }
+    emitted.groupBy(col("table"), col("rowkey"))
       .agg(max_by(struct(col("version"), col("deleted"), col("cells")),
         col("batch")).as("st"))
       .select(col("table"), col("rowkey"), col("st.version").as("version"),
@@ -1526,19 +1325,7 @@ object StreamingOps {
       .dropDuplicates("user_id", "day")
       .groupBy(col("day"))
       .agg(count(lit(1)).as("dau"))
-    // r18: this gate missed the r17 runAdaptive conversion — it was
-    // paying TWO stateful operators (dedup + agg) × session
-    // partitions × batch count of state-store commits (~8 s of pure
-    // store overhead at local 32); sized like every other gate.
-    runAdaptive(s, new java.io.File(ckpt).getParent,
-      dau.writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        df.write.mode("overwrite").parquet(out)
-      }
-      .outputMode("complete")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
-    s.read.parquet(out)
+    StreamGate.toParquet(s, dau, ckpt, out, OutputMode.Complete())
   }
 
   /** q221: STREAMING admission QUOTA — at most 5 events per (user,
@@ -1574,15 +1361,8 @@ object StreamingOps {
       .select(col("rowkey").cast("long").as("user"),
         expr("ts div 3600000000").as("hour"), col("seq"))
       .as[Quota.QuotaEvent]
-    runAdaptive(s, new java.io.File(ckpt).getParent,
-      Quota.track(events, limit).toDF().writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        df.write.mode("append").parquet(out)
-      }
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
-    val finals = s.read.parquet(out)
+    val finals = StreamGate.toParquet(s, Quota.track(events, limit),
+      ckpt, out, OutputMode.Update())
       .groupBy(col("user"), col("hour"))
       .agg(max_by(struct(col("n"), col("admitted")), col("n")).as("f"))
       .select(col("user"), col("hour"), col("f.n").as("n"),
@@ -1625,15 +1405,7 @@ object StreamingOps {
         col("cells")(0)("qualifier").as("etype"),
         col("cells")(0)("value").cast("double").as("value"))
       .as[Scd2.Scd2Event]
-    runAdaptive(s, new java.io.File(ckpt).getParent,
-      Scd2.track(events).toDF().writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        df.write.mode("append").parquet(out)
-      }
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
-    s.read.parquet(out)
+    StreamGate.toParquet(s, Scd2.track(events), ckpt, out, OutputMode.Update())
       .filter(col("kind") =!= "late")
       // event_id is the version identity (same-ts versions share a
       // valid_from but never an id); open/closed/replay duplicates
@@ -2023,15 +1795,10 @@ object StreamingOps {
     WalSource.writeWalJson(WalSource.eventsAsWal(s, dir), walDir, batches = 8)
     val raw = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
       .select(col("seq"), col("ts"))
-    runAdaptive(s, stage,
-      raw.writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        walLedgerBatch(s, stateRoot, df, id, shards, rangeSize,
-          compactEvery, retentionUs)
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
+    StreamGate.run(s, raw, ckpt, OutputMode.Append()) { (df, id) =>
+      walLedgerBatch(s, stateRoot, df, id, shards, rangeSize,
+        compactEvery, retentionUs)
+    }
     walStateReport(s, stateRoot, shards)
   }
 
@@ -2098,16 +1865,8 @@ object StreamingOps {
       .withColumn("event_time", timestamp_micros(col("ts")))
       .withWatermark("event_time", "0 seconds")
       .as[graft.streaming.AsOfStream.Ev]
-    runAdaptive(s, stage,
-      graft.streaming.AsOfStream.track(s, evs).writeStream
-      .foreachBatch {
-        (df: Dataset[graft.streaming.AsOfStream.Out], id: Long) =>
-          df.withColumn("batch", lit(id)).write.mode("append").parquet(out)
-      }
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
-    s.read.parquet(out)
+    StreamGate.toParquet(s, graft.streaming.AsOfStream.track(s, evs),
+      ckpt, out, OutputMode.Update())
       .groupBy(col("purchase_id"))
       .agg(max_by(struct(col("user_id"), col("purchase_ts"),
         col("click_id"), col("click_ts")), col("batch")).as("st"))
@@ -2141,18 +1900,10 @@ object StreamingOps {
       .withColumn("event_time", timestamp_micros(col("ts")))
       .withWatermark("event_time", "0 seconds")
       .as[graft.streaming.RateMonitor.Ev]
-    runAdaptive(s, stage,
-      graft.streaming.RateMonitor.track(s, evs).writeStream
-      .foreachBatch {
-        (df: Dataset[graft.streaming.RateMonitor.RateOut], id: Long) =>
-          df.write.mode("append").parquet(out)
-      }
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
     // finalize-once emissions; distinct absorbs checkpoint-replay
     // duplicates (values are deterministic per hour)
-    s.read.parquet(out)
+    StreamGate.toParquet(s, graft.streaming.RateMonitor.track(s, evs),
+      ckpt, out, OutputMode.Append())
       .select(col("h"), col("n"), col("s24"), col("ratio_ppm"),
         when(col("spike"), 1L).otherwise(0L).as("spike"))
       .distinct()
@@ -2183,15 +1934,7 @@ object StreamingOps {
           "cast(round(cast(cells[0].value as double) * 100) as bigint)" +
             " div 2000"), lit(nb - 1L)).as("bin"))
       .groupBy(col("side"), col("bin")).agg(count(lit(1)).as("n"))
-    runAdaptive(s, stage,
-      binned.writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        df.withColumn("batch", lit(id)).write.mode("append").parquet(out)
-      }
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
-    val hist = s.read.parquet(out)
+    val hist = StreamGate.toParquet(s, binned, ckpt, out, OutputMode.Update())
       .groupBy(col("side"), col("bin"))
       .agg(max_by(col("n"), col("batch")).as("n"))
     val bins = s.range(nb).select(col("id").as("bin"))
@@ -2239,16 +1982,8 @@ object StreamingOps {
           .as("c"))
       .groupBy(col("qualifier"))
       .agg(mg(col("c")).as("sk"))
-    runAdaptive(s, stage,
-      sketches.writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        df.withColumn("batch", lit(id)).write.mode("append").parquet(out)
-      }
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
     // metadata-sized: one sketch row per event type
-    val fin = s.read.parquet(out)
+    val fin = StreamGate.toParquet(s, sketches, ckpt, out, OutputMode.Update())
       .groupBy(col("qualifier"))
       .agg(max_by(col("sk"), col("batch")).as("sk"))
       .collect()
@@ -2303,16 +2038,10 @@ object StreamingOps {
     val hourly = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
       .select(expr("ts div 3600000000").as("h"))
       .groupBy(col("h")).agg(count(lit(1)).as("x"))
-    runAdaptive(s, stage,
-      hourly.writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        df.withColumn("batch", lit(id)).write.mode("append").parquet(out)
-      }
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
+    val emitted = StreamGate.toParquet(s, hourly,
+      ckpt, out, OutputMode.Update())
     Events.pageHinkleyOf(
-      s.read.parquet(out).groupBy(col("h"))
+      emitted.groupBy(col("h"))
         .agg(max_by(col("x"), col("batch")).as("x")),
       lambda)
   }
@@ -2351,16 +2080,9 @@ object StreamingOps {
         expr("ts div 3600000000").as("h"))
       .groupBy(col("event_type"), col("h"))
       .agg(count(lit(1)).as("x"))
-    runAdaptive(s, stage,
-      cells.writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        df.withColumn("batch", lit(id)).write.mode("append").parquet(out)
-      }
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
+    val emitted = StreamGate.toParquet(s, cells, ckpt, out, OutputMode.Update())
     Events.theilHoursOf(
-      s.read.parquet(out).groupBy(col("event_type"), col("h"))
+      emitted.groupBy(col("event_type"), col("h"))
         .agg(max_by(col("x"), col("batch")).as("x")))
   }
 
@@ -2387,16 +2109,9 @@ object StreamingOps {
         expr("ts div 3600000000").as("h"))
       .groupBy(col("salt"), col("h"))
       .agg(count(lit(1)).as("n"))
-    runAdaptive(s, stage,
-      cells.writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        df.withColumn("batch", lit(id)).write.mode("append").parquet(out)
-      }
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
+    val emitted = StreamGate.toParquet(s, cells, ckpt, out, OutputMode.Update())
     Bucketing.saltAuditFromCells(
-      s.read.parquet(out).groupBy(col("salt"), col("h"))
+      emitted.groupBy(col("salt"), col("h"))
         .agg(max_by(col("n"), col("batch")).as("n")),
       salts)
   }
@@ -2414,16 +2129,10 @@ object StreamingOps {
           " as bigint)").as("vm"))
       .groupBy(col("event_type"), col("h"))
       .agg(max(col("vm")).as("m"))
-    runAdaptive(s, stage,
-      blocks.writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        df.withColumn("batch", lit(id)).write.mode("append").parquet(out)
-      }
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
+    val emitted = StreamGate.toParquet(s, blocks,
+      ckpt, out, OutputMode.Update())
     Events.gumbelTailOf(
-      s.read.parquet(out).groupBy(col("event_type"), col("h"))
+      emitted.groupBy(col("event_type"), col("h"))
         .agg(max_by(col("m"), col("batch")).as("m")))
   }
 
@@ -2473,11 +2182,9 @@ object StreamingOps {
     * (the q476 bound), never a full recompute. */
   private[graft] def incrementalPageRankBatch(s: SparkSession,
       stateRoot: String, batch: DataFrame, iters: Int): Unit = {
-    // r18: ONE pinned scan of the state store per batch — the edge
-    // frame and the iters+1 round frames previously each carried
-    // their own localCheckpoint, i.e. 7 separate jobs re-reading the
-    // same parquet dirs (guide §1.2). The per-kind/round filters now
-    // run lazily off the one pinned frame.
+    // ONE pinned scan of the state store per batch: the edge frame
+    // and the iters+1 round frames filter lazily off it, instead of
+    // re-reading the same parquet dirs once each.
     val st = s.read.parquet(storeBaseDir(stateRoot, "prstate").get)
       .localCheckpoint()
     val edges = st.filter(col("kind") === "e")
@@ -2522,16 +2229,11 @@ object StreamingOps {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("pb",
         org.apache.spark.sql.types.LongType)))
-    runAdaptive(s, stage,
-      s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).json(inDir)
-      .writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        incrementalPageRankBatch(s, stateRoot, df, iters)
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()))
+    StreamGate.run(s,
+        s.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(inDir),
+        ckpt, OutputMode.Append()) { (df, _) =>
+      incrementalPageRankBatch(s, stateRoot, df, iters)
+    }
     s.read.parquet(storeBaseDir(stateRoot, "prstate").get)
       .filter(col("kind") === "s" && col("round") === iters)
       .select(col("a").as("part"), col("b").as("score_scaled"))

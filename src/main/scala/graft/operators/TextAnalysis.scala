@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import graft.Tables
 import graft.functions.TextFunctions._
 
@@ -1672,18 +1673,12 @@ object TextAnalysis {
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("text",
         org.apache.spark.sql.types.StringType)))
-    StreamingOps.runAdaptive(s, stage,
-      s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 2).json(inDir)
-      .writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        nbClassifyBatch(s, stateRoot, df)
-          .write.mode("append")
-          .parquet(StreamingOps.storeDeltaDir(stateRoot, "preds"))
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
+    StreamGate.run(s,
+        s.readStream.schema(schema).option("maxFilesPerTrigger", 2).json(inDir),
+        ckpt, OutputMode.Append()) { (df, _) =>
+      nbClassifyBatch(s, stateRoot, df).write.mode("append")
+        .parquet(StreamingOps.storeDeltaDir(stateRoot, "preds"))
+    }
     StreamingOps.readStoreAll(s, s"$stateRoot", "preds").get.distinct()
       .groupBy(col("lang"), col("predicted"))
       .agg(count(lit(1)).as("n_docs"))
@@ -2030,16 +2025,11 @@ object TextAnalysis {
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("text",
         org.apache.spark.sql.types.StringType)))
-    StreamingOps.runAdaptive(s, stage,
-      s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 2).json(inDir)
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        unigramStreamBatch(s, stateRoot, df, id)
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
+    StreamGate.run(s,
+        s.readStream.schema(schema).option("maxFilesPerTrigger", 2).json(inDir),
+        ckpt, OutputMode.Append()) { (df, id) =>
+      unigramStreamBatch(s, stateRoot, df, id)
+    }
     unigramApplyReport(readStreamVocab(s, stateRoot),
       unigramVocab(trainWords(s, dir).localCheckpoint(), seedMultis,
         target))
