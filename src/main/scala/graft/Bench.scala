@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
 
-  /** Remove stale graft-owned artifacts from java.io.tmpdir BEFORE
+  /** Remove stale graft-owned artifacts from `tmp` (java.io.tmpdir) BEFORE
     * timing anything. Round-12 root cause: ~2,500 accumulated
     * spec/stage/checkpoint tmpdirs from prior verify/test runs
     * degraded the streaming gates 2x+ (state-store directory scans
@@ -10,8 +10,8 @@ object Bench {
     * that round's idle sweep were contaminated. Only names with
     * graft-owned prefixes are touched — the staged layouts the
     * warm-up pass needs are rebuilt by the queries themselves. */
-  private[graft] def cleanStaleTmp(): Unit = {
-    val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
+  private[graft] def cleanStaleTmp(tmp: java.nio.file.Path =
+      java.nio.file.Paths.get(sys.props("java.io.tmpdir"))): Unit = {
     val owned = Seq("graft-", "graft_", "spec_q")
     // Age guard: only entries last modified BEFORE this JVM started
     // are stale by construction. A concurrently running test/verify
@@ -19,27 +19,40 @@ object Bench {
     // younger than our start time and survive the sweep.
     val jvmStartMs =
       java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime
-    def staleOwned(p: java.nio.file.Path): Boolean =
-      owned.exists(p.getFileName.toString.startsWith) && {
-        try java.nio.file.Files.getLastModifiedTime(p).toMillis < jvmStartMs
-        catch { case _: java.io.IOException => false }
-      }
+    // A run directory (graft.operators.Stage.runRoot) whose JVM is
+    // still alive is live whatever its age.
+    def staleOwned(p: java.nio.file.Path): Boolean = {
+      val name = p.getFileName.toString
+      owned.exists(name.startsWith) &&
+        !graft.operators.Stage.liveRunDir(name) && {
+          try java.nio.file.Files.getLastModifiedTime(p).toMillis < jvmStartMs
+          catch { case _: java.io.IOException => false }
+        }
+    }
     val entries = java.nio.file.Files.list(tmp)
+    // best effort: an entry that fails to delete is retried next run
     try entries.iterator().forEachRemaining { p =>
-      if (staleOwned(p)) {
-        val walk =
-          try java.nio.file.Files.walk(p)
-          catch { case _: java.io.IOException => null }
-        if (walk != null)
-          try walk
-            .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .forEach { f =>
-              try java.nio.file.Files.delete(f)
-              catch { case _: java.io.IOException => () }
-            }
-          finally walk.close()
-      }
+      if (staleOwned(p))
+        try graft.operators.Stage.deleteTree(p)
+        catch {
+          case _: java.io.IOException | _: java.io.UncheckedIOException => ()
+        }
     } finally entries.close()
+  }
+
+  /** The local session every dev main runs on: `local[N]` with N
+    * shuffle partitions, N = SPARK_GRAFT_CPUS (default 4), UTC, no
+    * UI, WARN logging. */
+  private[graft] def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 
   /** (1m, 5m, 15m) load averages from /proc/loadavg — recorded into
@@ -56,17 +69,11 @@ object Bench {
     cleanStaleTmp()
     val loadBefore = loadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // The state-store maintenance interval stays at its default: a
-      // shorter one runs snapshot passes inside long streaming gates.
-      // State-store providers a finished gate leaves loaded are
-      // unloaded between entries instead (unloadState below).
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // The state-store maintenance interval stays at its default: a
+    // shorter one runs snapshot passes inside long streaming gates.
+    // State-store providers a finished gate leaves loaded are unloaded
+    // between entries instead (unloadState below).
+    val spark = localSession()
     // Timed action = noop-sink write: every output column is fully
     // evaluated and serialized (a count() lets Catalyst prune the
     // projections/aggregates it doesn't need, under-timing
@@ -87,75 +94,40 @@ object Bench {
     def selected(name: String): Boolean =
       only.forall(_.findFirstIn(name).isDefined)
     val gated = SparkEntry.queries.filter(kv => selected(kv._1))
-    // Warm-up policy (round-16 change, prompted by the driver's r15
-    // rc=124 timeout): the old per-entry untimed warm-up pass doubled
-    // the sweep's wall-clock by construction (~1800s clean, 2700s+
-    // under host contention) for a benefit that is only JIT/codegen/
-    // page-cache — every gate restages its own inputs per call
-    // (stagingRoot wipes), so the warm-up never skipped real work.
-    //   small (default): the same per-entry untimed warm-up pass,
-    //     but run against the sf0.001 dataset (SPARK_GRAFT_WARM_DIR).
-    //     Codegen sources, JIT paths, per-operator first-use init
-    //     (state-store providers, micro-batch planner, codec seams)
-    //     are all exercised identically — plan structure does not
-    //     depend on data volume — while the warm-up's data cost
-    //     collapses ~100x. Page cache for the TIMED dataset is warmed
-    //     separately by a full pre-read of every input table. A/B
-    //     measured r16 (16-entry subset, idle host): small-warm timed
-    //     totals within ~3% of full-warm, at ~15% of the warm-up
-    //     wall-clock — the fix for the driver's r15 rc=124 timeout.
-    //   session: one untimed pass over 4 representative entries +
-    //     the table pre-read (A/B r16: 2x WORSE timed totals — each
-    //     stateful-operator flavor pays first-use init inside its
-    //     timed run; kept for forensics).
-    //   full: the pre-r16 behavior (per-entry warm-up at the timed
-    //     SF — ~2x total wall-clock), kept for A/B forensics.
-    //   none: no warm-up at all (dev-only, coldest numbers).
-    val warmMode = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "small")
-    // Reads through Tables.load, so the warm-up also fills its
-    // schema memo for the timed dataset.
+    // Warm-up: one untimed pass of every entry over the sf0.001
+    // dataset (SPARK_GRAFT_WARM_DIR), which exercises codegen, JIT
+    // paths and per-operator first-use init (state-store providers,
+    // micro-batch planner, codec seams) as the timed run does, since
+    // plan structure does not depend on data volume; then a full
+    // pre-read of every input table warms the page cache for the
+    // timed dataset. Every gate restages its own inputs per call, so
+    // a warm-up at the timed SF would skip no real work.
+    // Reads through Tables.load, so the warm-up also fills its schema
+    // memo for the timed dataset.
     def preReadTables(): Unit = Tables.all.foreach { t =>
       try Tables.load(spark, sfDir, t)
         .write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
     }
-    if (warmMode == "full") {
-      gated.foreach { case (_, fn) =>
+    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
+      "/root/testdata/sf0.001")
+    gated.foreach { case (_, fn) =>
+      try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
+      catch { case _: Throwable => () }
+      unloadState()
+    }
+    preReadTables()
+    // burn-in at the TIMED SF: tiered-JIT (C2) compilation of the
+    // shared per-row hot loops (json WAL parse, unsafe-row state
+    // ops, parquet scan) only triggers at real row counts — the
+    // sf0.001 warm-up never reaches the backedge thresholds. Two
+    // streaming gates (HDFS + RocksDB state providers) push those
+    // loops to steady state before anything is timed.
+    Seq("q53_wal_stream_materialize", "q100_rocksdb_materialize")
+      .flatMap(SparkEntry.queries.get).foreach { fn =>
         try run(fn) catch { case _: Throwable => () }
         unloadState()
       }
-    } else if (warmMode == "small") {
-      val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
-        "/root/testdata/sf0.001")
-      gated.foreach { case (_, fn) =>
-        try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        unloadState()
-      }
-      preReadTables()
-      // burn-in at the TIMED SF: tiered-JIT (C2) compilation of the
-      // shared per-row hot loops (json WAL parse, unsafe-row state
-      // ops, parquet scan) only triggers at real row counts — the
-      // sf0.001 warm-up never reaches the backedge thresholds. Two
-      // streaming gates (HDFS + RocksDB state providers) push those
-      // loops to steady state before anything is timed.
-      Seq("q53_wal_stream_materialize", "q100_rocksdb_materialize")
-        .flatMap(SparkEntry.queries.get).foreach { fn =>
-          try run(fn) catch { case _: Throwable => () }
-          unloadState()
-        }
-    } else if (warmMode == "session") {
-      preReadTables()
-      // representative machinery warm-up (cheap entries only):
-      // q01 agg pipeline, q82 shuffle/bucketed join, q42 WAL source +
-      // sliding window state, q459 binary codec seam.
-      Seq("q01_pricing_summary", "q82_bucketed_join",
-          "q42_sliding_counts", "q459_bmp_decode")
-        .flatMap(SparkEntry.queries.get).foreach { fn =>
-          try run(fn) catch { case _: Throwable => () }
-          unloadState()
-        }
-    }
     // Incremental partial artifact: after each timed entry the
     // results-so-far are flushed to bench_partial.json (tmp+rename)
     // so a driver-side timeout still leaves a parseable artifact of
@@ -260,14 +232,14 @@ object Bench {
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val loadAfter = loadAvg()
     def arr(xs: Seq[Double]) = xs.mkString("[", ",", "]")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","warmup":"$warmMode","loadavg_before":${arr(loadBefore)},"loadavg_after":${arr(loadAfter)}}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","warmup":"small","loadavg_before":${arr(loadBefore)},"loadavg_after":${arr(loadAfter)}}""")
     // Compact summary LAST: the round driver keeps only a 2000-char
     // stdout tail, and the full result line above is ~25 KB for 477
     // entries — structurally unparseable from the tail (16 rounds of
     // `parsed: null`). This second line is < 200 chars, so the tail
     // always ends with a parseable record (VERDICT r16 Next #3).
     val failedN = results.values.count(_ < 0)
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"failed":$failedN,"sf":"$sfDir","warmup":"$warmMode"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"failed":$failedN,"sf":"$sfDir","warmup":"small"}""")
     spark.stop()
   }
 }

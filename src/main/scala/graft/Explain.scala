@@ -53,11 +53,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val dir = args(0); val out = args(1); val suffix = args(2)
     val names = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.localSession()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     names.foreach { n =>
       val df = roundProbes.get(n)

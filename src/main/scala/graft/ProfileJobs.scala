@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool (round-17 optimization): run one query with a listener
   * that prints every Spark job's wall-clock, stage count, and task
@@ -15,12 +14,7 @@ object ProfileJobs {
     Bench.cleanStaleTmp() // same pre-run hygiene as the bench (r12 lesson)
     val dir = args(0); val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", cpus)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.localSession()
     @volatile var t00 = 0L
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int)]()
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()

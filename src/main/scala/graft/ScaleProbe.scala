@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling probe (dev main — not part of the driver contract): times
@@ -16,11 +16,7 @@ import org.apache.spark.sql.functions._
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.localSession()
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
 
@@ -216,10 +212,11 @@ object ScaleProbe {
         Incremental.partialAgg(baseSide).write.mode("overwrite").parquet(snap)
         if (k == 1) { // warm codegen
           time(Incremental.partialAgg(ev))
-          time(Incremental.mergeDelta(spark, snap, delta))
+          time(Incremental.mergeDelta(spark.read.parquet(snap), delta))
         }
         val tRecompute = time(Incremental.partialAgg(ev))
-        val tMerge = time(Incremental.mergeDelta(spark, snap, delta))
+        val tMerge = time(Incremental.mergeDelta(spark.read.parquet(snap),
+          delta))
         val nDelta = delta.count()
         println(f"""{"k":$k,"events":$n,"delta":$nDelta,"recompute_sec":$tRecompute%.2f,"merge_sec":$tMerge%.2f}""")
         ev.unpersist()

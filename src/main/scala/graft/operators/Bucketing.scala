@@ -22,14 +22,14 @@ object Bucketing {
     * when neither side fits. The oracle replays the plain join on
     * the raw parquet: layout must never change results. */
   def bucketedJoin(s: SparkSession, dir: String): DataFrame = {
-    val stage = StreamingOps.stagingRoot("q82", dir)
+    val stage = Stage("q82", dir)
     Tables.orders(s, dir).write
       .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-      .option("path", s"$stage/orders_b")
+      .option("path", stage.path("orders_b"))
       .mode("overwrite").saveAsTable("graft_q82_orders")
     Tables.lineitem(s, dir).write
       .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-      .option("path", s"$stage/lineitem_b")
+      .option("path", stage.path("lineitem_b"))
       .mode("overwrite").saveAsTable("graft_q82_lineitem")
     s.table("graft_q82_lineitem")
       .join(s.table("graft_q82_orders"), col("l_orderkey") === col("o_orderkey"))
@@ -108,11 +108,8 @@ object Bucketing {
     * results. */
   def partitionPruning(s: SparkSession, dir: String,
       day: Long = 19739L): DataFrame = {
-    val stage = StreamingOps.stagingRoot("q138", dir)
-    Tables.events(s, dir)
-      .withColumn("day", expr("ts div 86400000000"))
-      .write.partitionBy("day").mode("overwrite").parquet(s"$stage/events_p")
-    s.read.parquet(s"$stage/events_p")
+    Stage("q138", dir).parquet("events_p", Tables.events(s, dir)
+        .withColumn("day", expr("ts div 86400000000")), "day")
       .filter(col("day") === day)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -226,17 +223,18 @@ object Bucketing {
     * revenue. The oracle computes the same from the raw table — the
     * layout/generation split must never change results. */
   def schemaEvolution(s: SparkSession, dir: String): DataFrame = {
-    val stage = StreamingOps.stagingRoot("q179", dir)
+    val stage = Stage("q179", dir)
     val ev = Tables.events(s, dir)
     ev.filter(col("event_id") % 2 === 0)
       .select(col("event_id"), col("user_id"), col("event_type"))
-      .write.mode("overwrite").parquet(stage + "/v1")
+      .write.mode("overwrite").parquet(stage.path("v1"))
     ev.filter(col("event_id") % 2 === 1)
       .select(col("event_id"), col("user_id"), col("event_type"),
         round(col("value") * 100).cast("long").as("value_cents"))
-      .write.mode("overwrite").parquet(stage + "/v2")
+      .write.mode("overwrite").parquet(stage.path("v2"))
+    // the schema merge is what this entry exercises: it stays inferred
     s.read.option("mergeSchema", "true")
-      .parquet(stage + "/v1", stage + "/v2")
+      .parquet(stage.path("v1"), stage.path("v2"))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(when(col("value_cents").isNull, 1L).otherwise(0L)).as("n_legacy"),
@@ -358,11 +356,9 @@ object Bucketing {
     * table with the same dow arithmetic — layout and pruning never
     * change results. */
   def dynamicPartitionPruning(s: SparkSession, dir: String): DataFrame = {
-    val stage = StreamingOps.stagingRoot("q258", dir)
-    Tables.events(s, dir)
-      .withColumn("day", expr("ts div 86400000000"))
-      .write.partitionBy("day").mode("overwrite").parquet(s"$stage/events_p")
-    dppJoined(s, dir, s"$stage/events_p")
+    dppJoined(s, dir, Stage("q258", dir).parquet("events_p",
+        Tables.events(s, dir).withColumn("day", expr("ts div 86400000000")),
+        "day"))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(round(col("value") * 100).cast("long")).as("sum_cents"))
@@ -370,20 +366,21 @@ object Bucketing {
 
   /** q258's fact⋈dim join over the already-staged layout — exposed
     * so PlanSpec can pin the DynamicPruningExpression on the scan
-    * (run [[dynamicPartitionPruning]] first to stage; this resolves
-    * the SAME path WITHOUT stagingRoot's fresh-start delete). */
+    * (run [[dynamicPartitionPruning]] first to stage; this reopens
+    * the SAME path without wiping it, so its read infers). */
   private[graft] def dppStagedJoin(s: SparkSession, dir: String): DataFrame =
-    dppJoined(s, dir, s"${StreamingOps.stagingPath("q258", dir)}/events_p")
+    dppJoined(s, dir,
+      s.read.parquet(s"${Stage.path("q258", dir)}/events_p"))
 
   private def dppJoined(s: SparkSession, dir: String,
-      factPath: String): DataFrame = {
+      fact: DataFrame): DataFrame = {
     val dim = Tables.events(s, dir)
       .agg(expr("min(ts div 86400000000)").as("d0"),
         expr("max(ts div 86400000000)").as("d1"))
       .select(explode(sequence(col("d0"), col("d1"))).as("day"))
       .withColumn("dow", expr("(day + 4) % 7"))
       .filter(col("dow").isin(0L, 6L))
-    s.read.parquet(factPath).join(broadcast(dim), "day")
+    fact.join(broadcast(dim), "day")
   }
 
   /** q273: SALTED ROWKEY POINT SCAN — the HBase read pattern the SEP
@@ -405,24 +402,27 @@ object Bucketing {
     * min/max on ts. */
   def rowkeyScan(s: SparkSession, dir: String,
       userId: Long = 7L, salts: Int = 16): DataFrame = {
-    val stage = StreamingOps.stagingRoot("q273", dir)
-    Tables.events(s, dir)
+    rowkeyScanOf(Stage("q273", dir).parquet("events_s", Tables.events(s, dir)
       .withColumn("salt", pmod(xxhash64(col("user_id")), lit(salts.toLong)))
       // salt FIRST: FileFormatWriter requires ordering by the partition
       // column and would inject its own (unstable) sort if unsatisfied,
       // destroying the (user_id, ts) clustering the row-group min/max
       // pruning story relies on
-      .sortWithinPartitions(col("salt"), col("user_id"), col("ts"))
-      .write.partitionBy("salt").mode("overwrite").parquet(s"$stage/events_s")
-    rowkeyScanStaged(s, s"$stage/events_s", userId, salts)
+      .sortWithinPartitions(col("salt"), col("user_id"), col("ts")),
+      "salt"), userId, salts)
   }
 
-  /** q273's read half over an already-staged layout — split out so
-    * the PlanSpec pin can resolve the scan WITHOUT re-staging (and
-    * without stagingRoot's fresh-start delete). */
+  /** q273's read half over an already-staged layout at `path` — split
+    * out so the PlanSpec pin can reopen the scan WITHOUT re-staging
+    * (and without the stage's fresh-start delete), so its read
+    * infers. */
   private[graft] def rowkeyScanStaged(s: SparkSession, path: String,
-      userId: Long, salts: Int): DataFrame = {
-    s.read.parquet(path)
+      userId: Long, salts: Int): DataFrame =
+    rowkeyScanOf(s.read.parquet(path), userId, salts)
+
+  private def rowkeyScanOf(staged: DataFrame, userId: Long,
+      salts: Int): DataFrame = {
+    staged
       // foldable salt predicate == HBase's salt-from-key point read:
       // static partition pruning keeps exactly one of the S dirs
       // [2024-01-08, 2024-01-22) in epoch micros — Tables.events'
@@ -466,14 +466,12 @@ object Bucketing {
     * hour) grid — the audit itself is never the skew. */
   def saltWriteAudit(s: SparkSession, dir: String,
       salts: Int = 16): DataFrame = {
-    val stage = StreamingOps.stagingRoot("q453", dir)
-    Tables.events(s, dir)
-      .withColumn("salt", pmod(col("user_id"), lit(salts.toLong)))
-      .repartition(col("salt")) // one file per salt dir, the q385 rule
-      .write.partitionBy("salt").mode("overwrite")
-      .parquet(s"$stage/events_s")
-    saltWriteAuditOf(
-      s.read.parquet(s"$stage/events_s"), col("salt"), salts)
+    saltWriteAuditOf(Stage("q453", dir).parquet("events_s",
+        Tables.events(s, dir)
+          .withColumn("salt", pmod(col("user_id"), lit(salts.toLong)))
+          .repartition(col("salt")), // one file per salt dir, the q385 rule
+        "salt"),
+      col("salt"), salts)
   }
 
   /** Audit core over any salted frame — per-salt totals, load

@@ -763,14 +763,17 @@ object Dedup {
     * daily-increment cost is |delta| banding + two asymmetric
     * equi-joins into the index, however large the base corpus. */
   def probeBaseIndex(s: SparkSession, indexPath: String, delta: DataFrame): DataFrame = {
-    val baseHashes = s.read.parquet(s"$indexPath/hashes")
-      .withColumn("in_base", lit(1))
-    val baseBands = s.read.parquet(s"$indexPath/bands")
+    // the index stores [[writeBaseIndex]]'s schemas, which the delta's
+    // own hashes and bands share: bind them instead of inferring
     val deltaH = delta.select(col("doc_id"), md5(col("text").cast("binary")).as("h"))
+    val dBands = minhashBandsOf(delta)
+    val baseHashes = s.read.schema(deltaH.select(col("h")).schema)
+      .parquet(s"$indexPath/hashes").withColumn("in_base", lit(1))
+    val baseBands = s.read.schema(dBands.schema).parquet(s"$indexPath/bands")
     val exact = deltaH.join(baseHashes.hint("shuffle_hash"), Seq("h"), "left")
       .select(col("doc_id"),
         when(col("in_base").isNotNull, 1).otherwise(0).as("exact_dup"))
-    val near = minhashBandsOf(delta).as("d")
+    val near = dBands.as("d")
       .join(baseBands.as("b"),
         col("d.band") === col("b.band") && col("d.band_key") === col("b.band_key"))
       .select(col("d.doc_id").as("doc_id")).distinct()
@@ -795,7 +798,7 @@ object Dedup {
     * documents. */
   def persistedIncrementalDedup(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    val idx = StreamingOps.stagingRoot("q111idx", dir)
+    val idx = Stage("q111idx", dir).root
     writeBaseIndex(docs.filter(col("doc_id") % 2 === 0), idx)
     probeBaseIndex(s, idx, docs.filter(col("doc_id") % 2 =!= 0))
   }
@@ -932,23 +935,15 @@ object Dedup {
     * the SAME protocol. */
   private[graft] def runStreamDedup(s: SparkSession, dir: String,
       stage: String, compactEvery: Int = 3): Unit = {
-    val stateRoot = s"$stage/state"
-    val inDir = s"$stage/in"; val ckpt = s"$stage/ckpt"
+    val st = Stage.at(stage)
+    val stateRoot = st.path("state")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stateRoot))
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
     initDedupIndex(s, stateRoot, docs.filter(col("doc_id") % 2 === 0))
-    docs.filter(col("doc_id") % 2 =!= 0)
-      .repartitionByRange(6, col("doc_id")).toJSON
-      .write.mode("overwrite").text(inDir)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
+    val delta = st.jsonStream("in", docs.filter(col("doc_id") % 2 =!= 0),
+      col("doc_id"), files = 6, maxFilesPerTrigger = 2)
     // md5 banding per batch is CPU-bound: see StreamGate's sizing
-    StreamGate.run(s,
-        s.readStream.schema(schema).option("maxFilesPerTrigger", 2).json(inDir),
-        ckpt, OutputMode.Append(), workFactor = 256L) { (df, id) =>
+    st.run(delta, OutputMode.Append(), workFactor = 256L) { (df, id) =>
       dedupIndexBatch(s, stateRoot, df, id, compactEvery)
     }
   }
@@ -986,9 +981,9 @@ object Dedup {
     * continuous path computes exactly what the batch path computes
     * however the stream was batched, compacted, or replayed. */
   def streamDedupIndex(s: SparkSession, dir: String): DataFrame = {
-    val stage = StreamingOps.stagingRoot("q326", dir)
-    runStreamDedup(s, dir, stage)
-    streamDedupVerdicts(s, dir, s"$stage/state")
+    val stage = Stage("q326", dir)
+    runStreamDedup(s, dir, stage.root)
+    streamDedupVerdicts(s, dir, stage.path("state"))
   }
 
   /** q327: WITHIN-STREAM near-dup pair discovery — the evidence the
@@ -1000,9 +995,9 @@ object Dedup {
     * shape restricted to odd ids) — pair discovery is
     * batching-invariant. */
   def streamDedupPairs(s: SparkSession, dir: String): DataFrame = {
-    val stage = StreamingOps.stagingRoot("q327", dir)
-    runStreamDedup(s, dir, stage)
-    StreamingOps.readStoreAll(s, s"$stage/state", "pairs")
+    val stage = Stage("q327", dir)
+    runStreamDedup(s, dir, stage.root)
+    StreamingOps.readStoreAll(s, stage.path("state"), "pairs")
       .map(_.distinct())
       .getOrElse {
         import s.implicits._
@@ -1694,7 +1689,7 @@ object Dedup {
   /** q181: INCREMENTAL connected components — the pair-graph
     * counterpart of q111's persisted-index dedup: the base corpus
     * (doc_id%4 ≠ 3) has its band index AND component labels written
-    * once ([[stagingRoot]] parquet standing in for the catalog);
+    * once (parquet under a [[Stage]] standing in for the catalog);
     * an increment (doc_id%4 = 3) is folded in WITHOUT re-banding or
     * re-propagating the base. The algebra that makes this exact:
     * base components collapse to SUPER-NODES (their min-id label),
@@ -1710,7 +1705,7 @@ object Dedup {
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
     val base = docs.filter(col("doc_id") % 4 =!= 3)
     val delta = docs.filter(col("doc_id") % 4 === 3)
-    val stage = StreamingOps.stagingRoot("q181idx", dir)
+    val stage = Stage("q181idx", dir).root
     writeComponentIndex(s, base, stage)
     probeComponentIndex(s, stage, delta)
   }
@@ -1720,17 +1715,16 @@ object Dedup {
     * (parquet standing in for the catalog). Paid once, amortized
     * across every subsequent increment. */
   def writeComponentIndex(s: SparkSession, base: DataFrame, stage: String): Unit = {
-    minhashBandsOf(base).write.mode("overwrite").parquet(stage + "/bands")
-    val bb = s.read.parquet(stage + "/bands")
+    val st = Stage.at(stage)
+    val bb = st.parquet("bands", minhashBandsOf(base))
     val baseEdges = bb.as("a")
       .join(bb.as("b"),
         col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2")).distinct()
-    base.select(col("doc_id"))
+    st.parquet("labels", base.select(col("doc_id"))
       .join(components(baseEdges), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("component"), col("doc_id")).as("sn"))
-      .write.mode("overwrite").parquet(stage + "/labels")
+      .select(col("doc_id"), coalesce(col("component"), col("doc_id")).as("sn")))
   }
 
   /** [[incrementalComponents]]'s per-increment phase: reads ONLY the
@@ -1738,12 +1732,15 @@ object Dedup {
     * never rescanned, re-banded, or re-propagated; the component
     * join runs on the |delta|-sized super-node graph. */
   def probeComponentIndex(s: SparkSession, stage: String, delta: DataFrame): DataFrame = {
-    val idx = s.read.parquet(stage + "/bands")
-    val baseMap = s.read.parquet(stage + "/labels")
-    // r18 (guide §1.2): pin the delta banding — it feeds the
-    // base-probe join and BOTH sides of the delta self-join, so
-    // un-pinned the 8-md5 signature pass over the delta ran 3x.
+    // pin the delta banding — it feeds the base-probe join and BOTH
+    // sides of the delta self-join, so un-pinned the 8-md5 signature
+    // pass over the delta ran 3x
     val dBands = minhashBandsOf(delta).localCheckpoint()
+    // the index holds the delta's own band and label schemas: bind
+    // them instead of inferring
+    val deltaMap = delta.select(col("doc_id"), col("doc_id").as("sn"))
+    val idx = s.read.schema(dBands.schema).parquet(stage + "/bands")
+    val baseMap = s.read.schema(deltaMap.schema).parquet(stage + "/labels")
     val deltaBase = dBands.as("a")
       .join(idx.hint("shuffle_hash").as("b"),
         col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key"))
@@ -1753,8 +1750,7 @@ object Dedup {
         col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2")).distinct()
-    val allMap = baseMap
-      .union(delta.select(col("doc_id"), col("doc_id").as("sn")))
+    val allMap = baseMap.union(deltaMap)
     val superEdges = deltaBase.union(deltaDelta)
       .join(allMap.select(col("doc_id").as("d1"), col("sn").as("sn1"))
         .hint("shuffle_hash"), "d1")
@@ -2174,10 +2170,8 @@ object Dedup {
       .localCheckpoint()
     val base = edges.filter(col("__b") =!= 0).drop("__b")
     val delta = edges.filter(col("__b") === 0).drop("__b")
-    val stage = graft.operators.StreamingOps.stagingRoot("q324", dir)
-    bfsHopsOf(base, maxHops, seedMod)
-      .write.mode("overwrite").parquet(s"$stage/bfs_index")
-    val baseDist = s.read.parquet(s"$stage/bfs_index")
+    val baseDist = Stage("q324", dir)
+      .parquet("bfs_index", bfsHopsOf(base, maxHops, seedMod))
       .select(col("doc_id").as("v"), col("hops"))
     bfsRelaxOf(s, baseDist, edges.drop("__b"), delta, maxHops, seedMod)
   }
@@ -3055,23 +3049,15 @@ object Dedup {
     * (compaction mid-stream at the default cadence). */
   private[graft] def runStreamExactSubstr(s: SparkSession, dir: String,
       stage: String, k: Int, compactEvery: Int = 3): Unit = {
-    val stateRoot = s"$stage/state"
-    val inDir = s"$stage/in"; val ckpt = s"$stage/ckpt"
+    val st = Stage.at(stage)
+    val stateRoot = st.path("state")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stateRoot))
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
     initExactSubstrIndex(s, stateRoot, docs.filter(col("doc_id") % 2 === 0), k)
-    docs.filter(col("doc_id") % 2 =!= 0)
-      .repartitionByRange(6, col("doc_id")).toJSON
-      .write.mode("overwrite").text(inDir)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
+    val delta = st.jsonStream("in", docs.filter(col("doc_id") % 2 =!= 0),
+      col("doc_id"), files = 6, maxFilesPerTrigger = 2)
     // the positional-gram explode per batch is CPU-bound
-    StreamGate.run(s,
-        s.readStream.schema(schema).option("maxFilesPerTrigger", 2).json(inDir),
-        ckpt, OutputMode.Append(), workFactor = 256L) { (df, id) =>
+    st.run(delta, OutputMode.Append(), workFactor = 256L) { (df, id) =>
       exactSubstrIndexBatch(s, stateRoot, df, id, k, compactEvery)
     }
   }
@@ -3086,11 +3072,11 @@ object Dedup {
     * it — is what the stream maintains. */
   def streamExactSubstr(s: SparkSession, dir: String, k: Int = 5)
       : DataFrame = {
-    val stage = StreamingOps.stagingRoot("q412", dir)
-    runStreamExactSubstr(s, dir, stage, k)
+    val stage = Stage("q412", dir)
+    runStreamExactSubstr(s, dir, stage.root, k)
     val toks = substrToks(
       Tables.documents(s, dir).select(col("doc_id"), col("text")))
     exactSubstrFromOwn(toks, substrGrams(toks, k),
-      readGramOwnership(s, s"$stage/state").hint("shuffle_hash"), k)
+      readGramOwnership(s, stage.path("state")).hint("shuffle_hash"), k)
   }
 }

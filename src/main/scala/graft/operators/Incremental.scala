@@ -38,13 +38,13 @@ object Incremental {
         sum(round(col("value") * 100).cast("long")).as("sum_cents"))
 
   /** Materialize the base-side snapshot (events before `cutoff`) as a
-    * partial-aggregate parquet — written once, merged by every
-    * subsequent increment ([[mergeDelta]]). */
-  def writeAggSnapshot(s: SparkSession, dir: String, snapPath: String,
-      cutoffMicros: Long = DefaultCutoffMicros): Unit =
-    partialAgg(Tables.eventsTsBounded(s, dir,
-        maxMicros = Some(cutoffMicros - 1)))
-      .write.mode("overwrite").parquet(snapPath)
+    * partial-aggregate parquet under `stage` — written once, merged by
+    * every subsequent increment ([[mergeDelta]]) — and return its
+    * read-back. */
+  def writeAggSnapshot(s: SparkSession, dir: String, stage: Stage,
+      cutoffMicros: Long = DefaultCutoffMicros): DataFrame =
+    stage.parquet("agg", partialAgg(Tables.eventsTsBounded(s, dir,
+        maxMicros = Some(cutoffMicros - 1))))
 
   /** Merge a delta (same schema as the raw events table) into a
     * persisted snapshot: union of two partial aggregates + one
@@ -52,9 +52,8 @@ object Incremental {
     * the full recompute; the plan reads the snapshot parquet and the
     * delta scan only (spec-pinned — the base events are never
     * rescanned). */
-  def mergeDelta(s: SparkSession, snapPath: String, delta: DataFrame): DataFrame =
-    s.read.parquet(snapPath)
-      .unionByName(partialAgg(delta))
+  def mergeDelta(snapshot: DataFrame, delta: DataFrame): DataFrame =
+    snapshot.unionByName(partialAgg(delta))
       .groupBy(col("user_id"), col("event_type"))
       .agg(sum(col("n_events")).as("n_events"),
         sum(col("sum_cents")).as("sum_cents"))
@@ -67,9 +66,7 @@ object Incremental {
     * recompute). */
   def incrementalAgg(s: SparkSession, dir: String,
       cutoffMicros: Long = DefaultCutoffMicros): DataFrame = {
-    val snap = StreamingOps.stagingRoot("q126snap", dir) + "/agg"
-    writeAggSnapshot(s, dir, snap, cutoffMicros)
-    mergeDelta(s, snap,
+    mergeDelta(writeAggSnapshot(s, dir, Stage("q126snap", dir), cutoffMicros),
       Tables.eventsTsBounded(s, dir, minMicros = Some(cutoffMicros)))
   }
 
@@ -88,8 +85,7 @@ object Incremental {
     * pattern). Cost: |snapshot| + |delta| rows, never the corpus. */
   def ivmRetract(s: SparkSession, dir: String,
       cutoffMicros: Long = DefaultCutoffMicros): DataFrame = {
-    val snap = StreamingOps.stagingRoot("q289snap", dir) + "/agg"
-    writeAggSnapshot(s, dir, snap, cutoffMicros)
+    val snap = writeAggSnapshot(s, dir, Stage("q289snap", dir), cutoffMicros)
     val inserts = Tables.eventsTsBounded(s, dir,
         minMicros = Some(cutoffMicros))
       .withColumn("mult", lit(1L))
@@ -102,8 +98,7 @@ object Incremental {
       .agg(sum(col("mult")).as("n_events"),
         sum(col("mult") * round(col("value") * 100).cast("long"))
           .as("sum_cents"))
-    s.read.parquet(snap)
-      .unionByName(deltaAgg)
+    snap.unionByName(deltaAgg)
       .groupBy(col("user_id"), col("event_type"))
       .agg(sum(col("n_events")).as("n_events"),
         sum(col("sum_cents")).as("sum_cents"))

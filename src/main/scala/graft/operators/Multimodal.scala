@@ -23,6 +23,12 @@ import graft.Tables
 object Multimodal {
 
   case class BlobRow(doc_id: Long, blob: Array[Byte])
+
+  /** The name a stager writes its (doc_id, blob) media table under,
+    * inside the entry's [[Stage]]. Stagers encode in a single pass
+    * over the documents' own partitions: a repartition before the
+    * encode measured 2-3x slower across the staged-media family. */
+  private val Media = "media"
   case class DecodedMeta(
       doc_id: Long, byte_len: Long, content_sha: String,
       width: Int, height: Int, n_frames: Int)
@@ -377,7 +383,7 @@ object Multimodal {
     * all — at 100 TB this is the embarrassingly-parallel scan shape
     * a decode pass should be. */
   def ppmDecode(s: SparkSession, dir: String): DataFrame =
-    parsePpmHeader(s.read.parquet(stagePpmMedia(s, dir, "q300")))
+    parsePpmHeader(stagePpmMedia(s, dir, Stage("q300", dir)))
       .withColumn("n_pixel_bytes", col("width") * col("height") * 3)
       .withColumn("sum_pixels", expr(
         "aggregate(transform(sequence(1, CAST(n_pixel_bytes AS INT)), " +
@@ -394,9 +400,8 @@ object Multimodal {
     * every real-payload multimodal gate so encode and parse meet
     * ONLY at the staged file. */
   private[graft] def stagePpmMedia(s: SparkSession, dir: String,
-      tag: String): String = {
-    val media = s"${StreamingOps.stagingRoot(tag, dir)}/media"
-    Tables.documents(s, dir)
+      stage: Stage): DataFrame = {
+    stage.parquet(Media, Tables.documents(s, dir)
       .select(col("doc_id"),
         (col("doc_id") % 13 + 4).cast("int").as("w"),
         (col("doc_id") % 7 + 3).cast("int").as("h"),
@@ -407,9 +412,7 @@ object Multimodal {
       .select(col("doc_id"),
         concat(lit("P6\n"), col("w").cast("string"), lit(" "),
           col("h").cast("string"), lit("\n255\n"), col("pix"))
-          .cast("binary").as("blob"))
-      .write.mode("overwrite").parquet(media)
-    media
+          .cast("binary").as("blob")))
   }
 
   /** The q300 header parse over a staged (doc_id, blob) media table —
@@ -446,7 +449,7 @@ object Multimodal {
     * char k mod 32) — parse and prediction meet only at the staged
     * file, proving the offset arithmetic exact. */
   def ppmResize(s: SparkSession, dir: String): DataFrame =
-    parsePpmHeader(s.read.parquet(stagePpmMedia(s, dir, "q321")))
+    parsePpmHeader(stagePpmMedia(s, dir, Stage("q321", dir)))
       .select(col("doc_id"), col("s"), col("pix_off"), col("width"),
         col("height"), explode(expr("sequence(0, 11)")).as("i"))
       .withColumn("ty", expr("i div 6"))
@@ -488,16 +491,9 @@ object Multimodal {
     * shape). PNG is lossless 8-bit sRGB, so decode must return the
     * formula exactly. */
   private[graft] def stagePngMedia(s: SparkSession, dir: String,
-      tag: String): String = {
+      stage: Stage): DataFrame = {
     import s.implicits._
-    val media = s"${StreamingOps.stagingRoot(tag, dir)}/media"
-    Tables.documents(s, dir).select(col("doc_id"))
-      // r18: the r17 spread is removed — the r17 driver bench
-      // measured the whole staged-media family 2–3x SLOWER with it
-      // at BOTH core counts (q413/q415/q418/q419/q432 — VERDICT r17
-      // "What's wrong" #2): these sub-second stages paid a shuffle
-      // plus a many-small-files decode scan that dwarfed the encode
-      // parallelism it bought. Back to the r16 single-pass shape.
+    stage.parquet(Media, Tables.documents(s, dir).select(col("doc_id"))
       .as[Long]
       .mapPartitions { ids =>
         ids.map { id =>
@@ -518,18 +514,16 @@ object Multimodal {
           javax.imageio.ImageIO.write(img, "png", bos)
           (id, bos.toByteArray)
         }
-      }.toDF("doc_id", "blob")
-      .write.mode("overwrite").parquet(media)
-    media
+      }.toDF("doc_id", "blob"))
   }
 
   /** Per-partition PNG decode of a staged (doc_id, blob) media table
     * — `ImageIO.read` on the executors, pixels back out as sRGB
     * ints. The shared read path of q328/q329. */
-  private def decodedPngs(s: SparkSession, media: String)
+  private def decodedPngs(s: SparkSession, media: DataFrame)
       : Dataset[(Long, Int, Int, Array[Int])] = {
     import s.implicits._
-    s.read.parquet(media).as[BlobRow]
+    media.as[BlobRow]
       .mapPartitions { rows =>
         // per-partition codec init happens HERE (ImageIO scans its
         // service registry once per task, not once per image)
@@ -554,7 +548,7 @@ object Multimodal {
     * decode pass needs. */
   def pngDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    decodedPngs(s, stagePngMedia(s, dir, "q328"))
+    decodedPngs(s, stagePngMedia(s, dir, Stage("q328", dir)))
       .map { case (id, w, h, px) =>
         var sr = 0L; var sg = 0L; var sb = 0L
         var i = 0
@@ -583,7 +577,7 @@ object Multimodal {
     * no shuffle. */
   def pngDhash(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    decodedPngs(s, stagePngMedia(s, dir, "q329"))
+    decodedPngs(s, stagePngMedia(s, dir, Stage("q329", dir)))
       .flatMap { case (id, w, h, px) =>
         def gray(gx: Int, gy: Int): Int = {
           val sx = gx * w / 9; val sy = gy * h / 8
@@ -612,7 +606,7 @@ object Multimodal {
     * agg. */
   def pngHistogram(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    decodedPngs(s, stagePngMedia(s, dir, "q376"))
+    decodedPngs(s, stagePngMedia(s, dir, Stage("q376", dir)))
       .flatMap { case (id, w, h, px) =>
         val buckets = new Array[Long](8)
         var i = 0
@@ -632,16 +626,9 @@ object Multimodal {
     * quality). Same dims/pixel formula as [[stagePngMedia]], so the
     * oracle knows the pre-compression raster exactly. */
   private[graft] def stageJpegMedia(s: SparkSession, dir: String,
-      tag: String): String = {
+      stage: Stage): DataFrame = {
     import s.implicits._
-    val media = s"${StreamingOps.stagingRoot(tag, dir)}/media"
-    Tables.documents(s, dir).select(col("doc_id"))
-      // r18: the r17 spread is removed — the r17 driver bench
-      // measured the whole staged-media family 2–3x SLOWER with it
-      // at BOTH core counts (q413/q415/q418/q419/q432 — VERDICT r17
-      // "What's wrong" #2): these sub-second stages paid a shuffle
-      // plus a many-small-files decode scan that dwarfed the encode
-      // parallelism it bought. Back to the r16 single-pass shape.
+    stage.parquet(Media, Tables.documents(s, dir).select(col("doc_id"))
       .as[Long]
       .mapPartitions { ids =>
         javax.imageio.ImageIO.setUseCache(false)
@@ -663,9 +650,7 @@ object Multimodal {
           javax.imageio.ImageIO.write(img, "jpg", bos)
           (id, bos.toByteArray)
         }
-      }.toDF("doc_id", "blob")
-      .write.mode("overwrite").parquet(media)
-    media
+      }.toDF("doc_id", "blob"))
   }
 
   /** q386: REAL JPEG DECODE through the q328 ImageIO executor seam
@@ -698,8 +683,7 @@ object Multimodal {
     * tighter than the gate tolerance here. */
   private[graft] def jpegStats(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val media = stageJpegMedia(s, dir, "q386")
-    s.read.parquet(media).as[BlobRow]
+    stageJpegMedia(s, dir, Stage("q386", dir)).as[BlobRow]
       .mapPartitions { rows =>
         javax.imageio.ImageIO.setUseCache(false)
         rows.map { r =>
@@ -771,12 +755,6 @@ object Multimodal {
       dir: String): DataFrame = {
     import s.implicits._
     Tables.documents(s, dir).select(col("doc_id"))
-      // r18: the r17 spread is removed — the r17 driver bench
-      // measured the whole staged-media family 2–3x SLOWER with it
-      // at BOTH core counts (q413/q415/q418/q419/q432 — VERDICT r17
-      // "What's wrong" #2): these sub-second stages paid a shuffle
-      // plus a many-small-files decode scan that dwarfed the encode
-      // parallelism it bought. Back to the r16 single-pass shape.
       .as[Long]
       .mapPartitions { ids =>
         javax.imageio.ImageIO.setUseCache(false)
@@ -839,14 +817,8 @@ object Multimodal {
     * the 100 TB decode-pass shape. */
   def bmpDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val media = s"${StreamingOps.stagingRoot("q459", dir)}/media"
-    Tables.documents(s, dir).select(col("doc_id"))
-      // r18: the r17 spread is removed — the r17 driver bench
-      // measured the whole staged-media family 2–3x SLOWER with it
-      // at BOTH core counts (q413/q415/q418/q419/q432 — VERDICT r17
-      // "What's wrong" #2): these sub-second stages paid a shuffle
-      // plus a many-small-files decode scan that dwarfed the encode
-      // parallelism it bought. Back to the r16 single-pass shape.
+    val media = Stage("q459", dir).parquet(Media,
+      Tables.documents(s, dir).select(col("doc_id"))
       .as[Long]
       .mapPartitions { ids =>
         javax.imageio.ImageIO.setUseCache(false)
@@ -868,9 +840,8 @@ object Multimodal {
           javax.imageio.ImageIO.write(img, "bmp", bos)
           (id, bos.toByteArray)
         }
-      }.toDF("doc_id", "blob")
-      .write.mode("overwrite").parquet(media)
-    s.read.parquet(media).as[BlobRow]
+      }.toDF("doc_id", "blob"))
+    media.as[BlobRow]
       .flatMap { r =>
         javax.imageio.ImageIO.setUseCache(false)
         val img = javax.imageio.ImageIO.read(
@@ -905,8 +876,7 @@ object Multimodal {
     * row). O(bytes) per row, zero decode, no shuffle. */
   def jpegMarkers(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val media = stageJpegMedia(s, dir, "q461")
-    s.read.parquet(media).as[BlobRow]
+    stageJpegMedia(s, dir, Stage("q461", dir)).as[BlobRow]
       .map { r =>
         val (sofW, sofH, sofC, valid) = jpegMarkerWalk(r.blob)
         (r.doc_id, sofW, sofH, sofC, valid)
@@ -1008,16 +978,9 @@ object Multimodal {
     * `javax.sound.sampled.AudioSystem.write` on the executors (the
     * [[decodePartitions]] batch shape: one codec context per task). */
   private[graft] def stageWavMedia(s: SparkSession, dir: String,
-      tag: String): String = {
+      stage: Stage): DataFrame = {
     import s.implicits._
-    val media = s"${StreamingOps.stagingRoot(tag, dir)}/media"
-    Tables.documents(s, dir).select(col("doc_id"))
-      // r18: the r17 spread is removed — the r17 driver bench
-      // measured the whole staged-media family 2–3x SLOWER with it
-      // at BOTH core counts (q413/q415/q418/q419/q432 — VERDICT r17
-      // "What's wrong" #2): these sub-second stages paid a shuffle
-      // plus a many-small-files decode scan that dwarfed the encode
-      // parallelism it bought. Back to the r16 single-pass shape.
+    stage.parquet(Media, Tables.documents(s, dir).select(col("doc_id"))
       .as[Long]
       .mapPartitions { ids =>
         ids.map { id =>
@@ -1046,9 +1009,7 @@ object Multimodal {
             javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
           (id, bos.toByteArray)
         }
-      }.toDF("doc_id", "blob")
-      .write.mode("overwrite").parquet(media)
-    media
+      }.toDF("doc_id", "blob"))
   }
 
   /** Integer decode stats of ONE WAV blob — header metadata from the
@@ -1100,7 +1061,7 @@ object Multimodal {
     * decode pass needs. */
   def wavDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(stageWavMedia(s, dir, "q409")).as[BlobRow]
+    stageWavMedia(s, dir, Stage("q409", dir)).as[BlobRow]
       .mapPartitions { rows =>
         rows.map { r =>
           val (rate, ch, fr, sum, sumSq, zc) = wavStatsOf(r.blob)
@@ -1127,7 +1088,7 @@ object Multimodal {
   def wavClipping(s: SparkSession, dir: String,
       rail: Int = 32700): DataFrame = {
     import s.implicits._
-    s.read.parquet(stageWavMedia(s, dir, "q460")).as[BlobRow]
+    stageWavMedia(s, dir, Stage("q460", dir)).as[BlobRow]
       .mapPartitions { rows =>
         rows.map { r =>
           val v = wavCh0Of(r.blob)
@@ -1171,7 +1132,7 @@ object Multimodal {
   private def decodedWavCh0(s: SparkSession, dir: String, tag: String)
       : Dataset[(Long, Array[Int])] = {
     import s.implicits._
-    s.read.parquet(stageWavMedia(s, dir, tag)).as[BlobRow]
+    stageWavMedia(s, dir, Stage(tag, dir)).as[BlobRow]
       .mapPartitions(rows => rows.map(r => (r.doc_id, wavCh0Of(r.blob))))
   }
 
@@ -1315,26 +1276,25 @@ object Multimodal {
     * no second scan of the archive. */
   def streamWavStats(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val media = stageWavMedia(s, dir, "q419m")
-    val stage = StreamingOps.stagingRoot("q419", dir)
-    val out = s"$stage/out"; val ckpt = s"$stage/ckpt"
-    val stats = mediaStream(s, media).mapPartitions { rows =>
-      rows.map { r =>
-        val (rate, ch, fr, sum, sumSq, zc) = wavStatsOf(r.blob)
-        (r.doc_id, rate, ch, fr, sum, sumSq, zc)
-      }
-    }.toDF("doc_id", "sample_rate", "n_channels", "n_frames",
-      "sum_samples", "sum_sq", "zero_cross_ch0")
-    StreamGate.toParquet(s, stats, ckpt, out, OutputMode.Append()).distinct()
+    val stage = Stage("q419", dir)
+    val stats = mediaStream(stage, stageWavMedia(s, dir, stage))
+      .mapPartitions { rows =>
+        rows.map { r =>
+          val (rate, ch, fr, sum, sumSq, zc) = wavStatsOf(r.blob)
+          (r.doc_id, rate, ch, fr, sum, sumSq, zc)
+        }
+      }.toDF("doc_id", "sample_rate", "n_channels", "n_frames",
+        "sum_samples", "sum_sq", "zero_cross_ch0")
+    stage.toParquet(stats, OutputMode.Append()).distinct()
   }
 
-  /** A staged (doc_id, blob) media archive as a stream of 8 files per
-    * micro-batch. */
-  private def mediaStream(s: SparkSession, media: String)
+  /** The (doc_id, blob) `media` a stager wrote under `stage`, as a
+    * stream of 8 files per micro-batch bound to the writer's schema. */
+  private def mediaStream(stage: Stage, media: DataFrame)
       : Dataset[BlobRow] = {
-    import s.implicits._
-    s.readStream.schema(s.read.parquet(media).schema)
-      .option("maxFilesPerTrigger", 8).parquet(media).as[BlobRow]
+    import media.sparkSession.implicits._
+    media.sparkSession.readStream.schema(media.schema)
+      .option("maxFilesPerTrigger", 8).parquet(stage.path(Media)).as[BlobRow]
   }
 
   /** Encode one channel-0 sample array as a real mono RIFF/WAVE blob
@@ -1373,14 +1333,8 @@ object Multimodal {
   def wavNearDup(s: SparkSession, dir: String, winFrames: Int = 10,
       maxHam: Int = 2): DataFrame = {
     import s.implicits._
-    val media = s"${StreamingOps.stagingRoot("q420", dir)}/media"
-    Tables.documents(s, dir).select(col("doc_id"))
-      // r18: the r17 spread is removed — the r17 driver bench
-      // measured the whole staged-media family 2–3x SLOWER with it
-      // at BOTH core counts (q413/q415/q418/q419/q432 — VERDICT r17
-      // "What's wrong" #2): these sub-second stages paid a shuffle
-      // plus a many-small-files decode scan that dwarfed the encode
-      // parallelism it bought. Back to the r16 single-pass shape.
+    val media = Stage("q420", dir).parquet(Media,
+      Tables.documents(s, dir).select(col("doc_id"))
       .as[Long]
       .mapPartitions { ids =>
         ids.flatMap { id =>
@@ -1393,9 +1347,8 @@ object Multimodal {
               encodeWavMono(v.map(x => (x / 256) * 256))))
           else orig
         }
-      }.toDF("doc_id", "blob")
-      .write.mode("overwrite").parquet(media)
-    val fp = s.read.parquet(media).as[BlobRow]
+      }.toDF("doc_id", "blob"))
+    val fp = media.as[BlobRow]
       .mapPartitions { rows =>
         rows.map { r =>
           val e = windowEnergies(wavCh0Of(r.blob), winFrames)
@@ -1453,7 +1406,7 @@ object Multimodal {
   def wavGain(s: SparkSession, dir: String,
       targetRms: Long = 8000L): DataFrame = {
     import s.implicits._
-    s.read.parquet(stageWavMedia(s, dir, "q428")).as[BlobRow]
+    stageWavMedia(s, dir, Stage("q428", dir)).as[BlobRow]
       .mapPartitions { rows =>
         rows.map { r =>
           val v = wavCh0Of(r.blob)
@@ -1506,16 +1459,9 @@ object Multimodal {
     * frame rate all derive from doc_id so the oracle can replay
     * them; pixels come from [[videoPixel]]. */
   private[graft] def stageY4mMedia(s: SparkSession, dir: String,
-      tag: String): String = {
+      stage: Stage): DataFrame = {
     import s.implicits._
-    val media = s"${StreamingOps.stagingRoot(tag, dir)}/media"
-    Tables.documents(s, dir).select(col("doc_id"))
-      // r18: the r17 spread is removed — the r17 driver bench
-      // measured the whole staged-media family 2–3x SLOWER with it
-      // at BOTH core counts (q413/q415/q418/q419/q432 — VERDICT r17
-      // "What's wrong" #2): these sub-second stages paid a shuffle
-      // plus a many-small-files decode scan that dwarfed the encode
-      // parallelism it bought. Back to the r16 single-pass shape.
+    stage.parquet(Media, Tables.documents(s, dir).select(col("doc_id"))
       .as[Long]
       .mapPartitions { ids =>
         ids.map { id =>
@@ -1525,9 +1471,7 @@ object Multimodal {
           val fpsNum = (24 + id % 2).toInt
           (id, encodeY4m(id, w, h, frames, fpsNum))
         }
-      }.toDF("doc_id", "blob")
-      .write.mode("overwrite").parquet(media)
-    media
+      }.toDF("doc_id", "blob"))
   }
 
   /** Assemble one genuine Y4M blob (header, FRAME markers, raw C444
@@ -1622,7 +1566,7 @@ object Multimodal {
   private def decodedY4m(s: SparkSession, dir: String, tag: String)
       : Dataset[(Long, Y4mAsset)] = {
     import s.implicits._
-    s.read.parquet(stageY4mMedia(s, dir, tag)).as[BlobRow]
+    stageY4mMedia(s, dir, Stage(tag, dir)).as[BlobRow]
       .mapPartitions(rows => rows.map(r => (r.doc_id, y4mParse(r.blob))))
   }
 
@@ -1725,10 +1669,8 @@ object Multimodal {
     * second scan of the archive. */
   def streamY4mStats(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val media = stageY4mMedia(s, dir, "q432m")
-    val stage = StreamingOps.stagingRoot("q432", dir)
-    val out = s"$stage/out"; val ckpt = s"$stage/ckpt"
-    val stats = mediaStream(s, media).map { r =>
+    val stage = Stage("q432", dir)
+    val stats = mediaStream(stage, stageY4mMedia(s, dir, stage)).map { r =>
       val a = y4mParse(r.blob)
       var ySum = 0L; var ySumSq = 0L
       var yMin = 255L; var yMax = 0L
@@ -1747,7 +1689,7 @@ object Multimodal {
         yMin, yMax, a.uSum, a.vSum)
     }.toDF("doc_id", "width", "height", "n_frames", "fps_num",
       "y_sum", "y_sum_sq", "y_min", "y_max", "u_sum", "v_sum")
-    StreamGate.toParquet(s, stats, ckpt, out, OutputMode.Append()).distinct()
+    stage.toParquet(stats, OutputMode.Append()).distinct()
   }
 
   /** Temporal luma fingerprint of one parsed asset: per consecutive
@@ -1774,21 +1716,28 @@ object Multimodal {
   def videoNearDup(s: SparkSession, dir: String, maxHam: Int = 1)
       : DataFrame = {
     import s.implicits._
-    val media = stageVideoTwinMedia(s, dir, "q433")
-    val fp = s.read.parquet(media).as[BlobRow]
+    val fp = stageVideoTwinMedia(s, dir, Stage("q433", dir)).as[BlobRow]
       .mapPartitions { rows =>
         rows.map(r => (r.doc_id, temporalBits(y4mParse(r.blob))))
       }.toDF("doc_id", "bits")
     videoNearDupOf(fp, maxHam)
   }
 
+  /** [[stageVideoTwinMedia]] under the stage of `tag`, returning the
+    * staged table's path. */
+  private[graft] def stageVideoTwinMedia(s: SparkSession, dir: String,
+      tag: String): String = {
+    val stage = Stage(tag, dir)
+    stageVideoTwinMedia(s, dir, stage)
+    stage.path(Media)
+  }
+
   /** Stage base assets + planted chroma-shifted twins (every tenth
     * asset; id + 10⁷, U/V +16 mod 256, luma untouched) — shared by
     * batch q433 and streaming q435. */
   private[graft] def stageVideoTwinMedia(s: SparkSession, dir: String,
-      tag: String): String = {
+      stage: Stage): DataFrame = {
     import s.implicits._
-    val media = s"${StreamingOps.stagingRoot(tag, dir)}/media"
     // Twin ids live at doc_id + 10⁷ — a corpus with doc_id ≥ 10⁷
     // would silently collide twins with real assets, corrupting the
     // planted ground truth on BOTH engines (parity would still pass,
@@ -1797,13 +1746,7 @@ object Multimodal {
       .agg(max(col("doc_id"))).collect()(0).getLong(0)
     require(maxId < 10000000L, s"twin-id keyspace collision: " +
       s"max(doc_id)=$maxId >= 1e7 — widen the twin offset")
-    Tables.documents(s, dir).select(col("doc_id"))
-      // r18: the r17 spread is removed — the r17 driver bench
-      // measured the whole staged-media family 2–3x SLOWER with it
-      // at BOTH core counts (q413/q415/q418/q419/q432 — VERDICT r17
-      // "What's wrong" #2): these sub-second stages paid a shuffle
-      // plus a many-small-files decode scan that dwarfed the encode
-      // parallelism it bought. Back to the r16 single-pass shape.
+    stage.parquet(Media, Tables.documents(s, dir).select(col("doc_id"))
       .as[Long]
       .mapPartitions { ids =>
         ids.flatMap { id =>
@@ -1837,9 +1780,7 @@ object Multimodal {
             Seq((id, base), (id + 10000000L, bos.toByteArray))
           } else Seq((id, base))
         }
-      }.toDF("doc_id", "blob")
-      .write.mode("overwrite").parquet(media)
-    media
+      }.toDF("doc_id", "blob"))
   }
 
   /** The q433 retrieval tail over a (doc_id, bits) fingerprint frame
@@ -1894,14 +1835,12 @@ object Multimodal {
   def streamVideoFp(s: SparkSession, dir: String, maxHam: Int = 1)
       : DataFrame = {
     import s.implicits._
-    val media = stageVideoTwinMedia(s, dir, "q435m")
-    val stage = StreamingOps.stagingRoot("q435", dir)
-    val store = s"$stage/store"; val ckpt = s"$stage/ckpt"
-    val fps = mediaStream(s, media).mapPartitions { rows =>
-      rows.map(r => (r.doc_id, temporalBits(y4mParse(r.blob))))
-    }.toDF("doc_id", "bits")
-    videoNearDupOf(
-      StreamGate.toParquet(s, fps, ckpt, store, OutputMode.Append()).distinct(),
+    val stage = Stage("q435", dir)
+    val fps = mediaStream(stage, stageVideoTwinMedia(s, dir, stage))
+      .mapPartitions { rows =>
+        rows.map(r => (r.doc_id, temporalBits(y4mParse(r.blob))))
+      }.toDF("doc_id", "bits")
+    videoNearDupOf(stage.toParquet(fps, OutputMode.Append()).distinct(),
       maxHam)
   }
 

@@ -517,19 +517,19 @@ object Pipeline {
   }
 
   def csvIngest(s: SparkSession, dir: String): DataFrame = {
-    val stage = StreamingOps.stagingRoot("q257", dir)
+    val stage = Stage("q257", dir)
     Tables.documents(s, dir)
       .select(when(col("doc_id") % 50 === 0,
           concat_ws(",", col("doc_id"), col("lang"), col("source"),
             concat(lit("x"), col("n_chars"))))
         .otherwise(concat_ws(",", col("doc_id"), col("lang"), col("source"),
           col("n_chars"))).as("value"))
-      .write.mode("overwrite").text(s"$stage/csv")
+      .write.mode("overwrite").text(stage.path("csv"))
     s.read
       .schema("doc_id LONG, lang STRING, source STRING, n_chars LONG, _corrupt STRING")
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt")
-      .csv(s"$stage/csv")
+      .csv(stage.path("csv"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_rows"),
         sum(when(col("_corrupt").isNotNull, 1L).otherwise(0L))

@@ -497,12 +497,11 @@ object Similarity {
     * quantizer or rescanning the base (the q111 persisted-index
     * pattern applied to the similarity family). At scale both
     * relations bucket by `cell` so a delta probe is a bucket-local
-    * join. */
-  def writeIvfIndex(base: DataFrame, indexPath: String): Unit = {
-    val centN = centroidsOf(base)
-    centN.write.mode("overwrite").parquet(s"$indexPath/centroids")
-    assignTo(base.select(col("vec_id"), col("v"), col("n2")), centN, 0, 64)
-      .write.mode("overwrite").parquet(s"$indexPath/cells")
+    * join. Returns the (centroids, cells) read-backs. */
+  def writeIvfIndex(base: DataFrame, stage: Stage): (DataFrame, DataFrame) = {
+    val centN = stage.parquet("centroids", centroidsOf(base))
+    (centN, stage.parquet("cells",
+      assignTo(base.select(col("vec_id"), col("v"), col("n2")), centN, 0, 64)))
   }
 
   /** q197: INCREMENTAL ANN — a delta of new embeddings probed
@@ -524,11 +523,10 @@ object Similarity {
     * engines replay bit-identically. */
   def ivfDeltaProbe(s: SparkSession, dir: String,
       threshold: Double = 0.4): DataFrame = {
-    val idx = StreamingOps.stagingRoot("q197idx", dir)
     val all = quantizedL(s, dir)
-    writeIvfIndex(all.filter(col("vec_id") % 5 =!= 0), idx)
-    val centN = broadcast(s.read.parquet(s"$idx/centroids"))
-    val cells = s.read.parquet(s"$idx/cells")
+    val (cent, cells) = writeIvfIndex(all.filter(col("vec_id") % 5 =!= 0),
+      Stage("q197idx", dir))
+    val centN = broadcast(cent)
     val dAsg = assignTo(all.filter(col("vec_id") % 5 === 0)
       .select(col("vec_id"), col("v"), col("n2")), centN, 0, 64)
     val scored = dAsg.as("d")
@@ -1433,23 +1431,18 @@ object Similarity {
     * [[StreamGate.run]] over a checkpoint. */
   private[graft] def runStreamIvf(s: SparkSession, dir: String,
       stage: String, compactEvery: Int = 3): Unit = {
-    import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
-    val stateRoot = s"$stage/state"
-    val inDir = s"$stage/in"; val ckpt = s"$stage/ckpt"
+    val st = Stage.at(stage)
+    val stateRoot = st.path("state")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stateRoot))
     // pin the quantized frame: it feeds BOTH the base-index build
     // (even split) and the delta JSONL staging (odd split)
     val embQ = quantizedL(s, dir).localCheckpoint()
     initIvfIndex(s, stateRoot, embQ.filter(col("vec_id") % 2 === 0))
-    embQ.filter(col("vec_id") % 2 =!= 0).select(col("vec_id"), col("v"))
-      .repartitionByRange(6, col("vec_id")).toJSON
-      .write.mode("overwrite").text(inDir)
-    val schema = StructType(Seq(StructField("vec_id", LongType),
-      StructField("v", ArrayType(LongType))))
+    val delta = st.jsonStream("in",
+      embQ.filter(col("vec_id") % 2 =!= 0).select(col("vec_id"), col("v")),
+      col("vec_id"), files = 6, maxFilesPerTrigger = 2)
     // the 64-centroid integer-dot assignment per batch is CPU-bound
-    StreamGate.run(s,
-        s.readStream.schema(schema).option("maxFilesPerTrigger", 2).json(inDir),
-        ckpt, OutputMode.Append(), workFactor = 256L) { (df, id) =>
+    st.run(delta, OutputMode.Append(), workFactor = 256L) { (df, id) =>
       ivfIndexBatch(s, stateRoot, df, id, compactEvery)
     }
   }
@@ -1462,9 +1455,9 @@ object Similarity {
     * the "both flagship indexes maintained continuously" story next
     * to q326/q327 (dedup index). */
   def streamIvfIndex(s: SparkSession, dir: String): DataFrame = {
-    val stage = StreamingOps.stagingRoot("q385", dir)
-    runStreamIvf(s, dir, stage)
-    StreamingOps.readStoreAll(s, s"$stage/state", "postings").get
+    val stage = Stage("q385", dir)
+    runStreamIvf(s, dir, stage.root)
+    StreamingOps.readStoreAll(s, stage.path("state"), "postings").get
       .filter(!col("is_base"))
       .select(col("vec_id"), col("cell").cast("long").as("cell"))
       .distinct()

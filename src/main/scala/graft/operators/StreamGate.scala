@@ -6,25 +6,26 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.LongType
 
 /** The one place a streaming gate starts, waits and reads back. A gate
-  * stages its input, builds its streaming query, and hands it to
-  * [[run]] (a custom per-batch protocol) or [[toParquet]] (a parquet
-  * sink plus its read-back). Every gate drains its source with
-  * `Trigger.AvailableNow` over the given checkpoint; re-running with
-  * the same checkpoint resumes.
+  * stages its input under a [[Stage]], builds its streaming query,
+  * and hands it to [[run]] (a custom per-batch protocol) or
+  * [[toParquet]] (a parquet sink plus its read-back), through the
+  * stage's own `run` and `toParquet`. Every gate drains its source
+  * with `Trigger.AvailableNow` over the given checkpoint; re-running
+  * with the same checkpoint resumes.
   *
   * Sizing: AQE never applies to streaming plans, so a stateful query
   * commits one state-store instance per shuffle partition per
   * micro-batch whatever its input size. [[run]] therefore sets the
-  * shuffle partitions to ceil(staged bytes × `workFactor` / 32 MB),
-  * clamped to [1, the session's setting], for the query's lifetime.
-  * The staged bytes are those under the checkpoint's parent, the
-  * gate's staging root, measured before the stream starts. A
-  * cluster-scale stage keeps the session's setting; a small one runs
-  * on a single partition. `workFactor` is the CPU work per staged
-  * byte: 1 for the state-bound gates, higher for gates that hash,
-  * explode or decode each batch (md5 banding, positional grams,
-  * centroid assignment), which the plain byte count would serialize.
-  * Every gate's result is partition-count-invariant. */
+  * shuffle partitions to ceil(`workBytes` / 32 MB), clamped to
+  * [1, the session's setting], for the query's lifetime. A stage
+  * passes the bytes under its root, measured before the stream
+  * starts, times the gate's CPU work per staged byte: 1 for the
+  * state-bound gates, higher for gates that hash, explode or decode
+  * each batch (md5 banding, positional grams, centroid assignment),
+  * which the plain byte count would serialize. A cluster-scale stage
+  * keeps the session's setting; a small one, or a caller that passes
+  * no size, runs on a single partition. Every gate's result is
+  * partition-count-invariant. */
 private[graft] object StreamGate {
 
   /** Upper bound on one gate's run. The slowest gate drains in under
@@ -39,14 +40,12 @@ private[graft] object StreamGate {
     * Every exit leaves no query running and the session's shuffle
     * partitions as they were. */
   def run[T](s: SparkSession, stream: Dataset[T], ckpt: String,
-      mode: OutputMode, workFactor: Long = 1L)
+      mode: OutputMode, workBytes: Long = 0L)
       (sink: (Dataset[T], Long) => Unit): Unit = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    val staged = java.nio.file.Paths.get(ckpt).toAbsolutePath.getParent
     val parts = math.max(1L, math.min(prev.toLong,
-      (StreamingOps.dirBytes(staged.toString) * workFactor +
-        BytesPerPartition - 1) / BytesPerPartition))
+      (workBytes + BytesPerPartition - 1) / BytesPerPartition))
     s.conf.set(key, parts.toString)
     try awaitBounded(stream.writeStream.foreachBatch(sink)
         .outputMode(mode)
@@ -64,9 +63,9 @@ private[graft] object StreamGate {
     * schema: it runs no schema-inference job, and a resumed run that
     * writes no new batch still reads the earlier run's rows. */
   def toParquet(s: SparkSession, stream: Dataset[_], ckpt: String,
-      out: String, mode: OutputMode): DataFrame = {
+      out: String, mode: OutputMode, workBytes: Long = 0L): DataFrame = {
     val tagged = mode == OutputMode.Update()
-    run(s, stream.toDF(), ckpt, mode) { (df, id) =>
+    run(s, stream.toDF(), ckpt, mode, workBytes) { (df, id) =>
       (if (tagged) df.withColumn("batch", lit(id)) else df)
         .write.mode(if (mode == OutputMode.Complete()) "overwrite" else "append")
         .parquet(out)

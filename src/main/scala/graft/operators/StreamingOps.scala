@@ -9,7 +9,7 @@ import graft.streaming.RowMaterializer
 
 /** Batch-replayable wrappers that put the STREAMING SEP core — DSv2
   * WAL source → stateful row materializer — under the driver's DuckDB
-  * oracle gate. Each gate stages its input under [[stagingRoot]] and
+  * oracle gate. Each gate stages its input under a [[Stage]] and
   * starts, waits and reads back through [[StreamGate]].
   */
 object StreamingOps {
@@ -33,25 +33,12 @@ object StreamingOps {
     */
   def walStreamMaterialize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val stage = stagingRoot("q53", dir)
-    val walDir = s"$stage/wal"
-    val ckpt = s"$stage/ckpt"
-    val out = s"$stage/out"
+    val stage = Stage("q53", dir)
     val puts = WalSource.eventsAsWal(s, dir)
       .filter(col("cells")(0)("kind") === "put")
-    WalSource.writeWalJson(puts, walDir, batches = 8)
-    finalStates(s, graft.sources.GraftWalStream(walDir, maxFilesPerTrigger = 2),
-      out, ckpt)
+    finalStatesOf(s, stage.walStream(puts, batches = 8,
+      maxFilesPerTrigger = 2).open(s))(stage.toParquet(_, OutputMode.Update()))
   }
-
-  /** The md5 key of an input dir's absolute path that names its
-    * staging dirs (see [[stagingRoot]]). String.hashCode collides too
-    * easily to key a wipe-then-write space. */
-  private[graft] def dirKey(dir: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(java.nio.file.Paths.get(dir).toAbsolutePath.toString
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
 
   /** First 8 md5 hex nibbles of `str` as a Long in [0, 2^32) — the
     * deterministic fixture hash the q263/q297 oracles replay in SQL
@@ -60,43 +47,6 @@ object StreamingOps {
     java.security.MessageDigest.getInstance("MD5")
       .digest(str.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(8), 16)
-
-  /** Non-wiping resolver for the staged path stagingRoot would use —
-    * the single source of truth for the naming convention, so specs
-    * that re-open a staged layout never duplicate (and silently
-    * drift from) the scheme. */
-  private[graft] def stagingPath(tag: String, dir: String): String =
-    java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft-$tag-${dirKey(dir)}").toString
-
-  /** Total bytes of regular files under `d` (0 when absent). */
-  private[graft] def dirBytes(d: String): Long = {
-    val p = java.nio.file.Paths.get(d)
-    if (!java.nio.file.Files.exists(p)) 0L
-    else {
-      val w = java.nio.file.Files.walk(p)
-      try w.filter(java.nio.file.Files.isRegularFile(_)).mapToLong { f =>
-        try java.nio.file.Files.size(f)
-        catch { case _: java.io.IOException => 0L }
-      }.sum()
-      finally w.close()
-    }
-  }
-
-  /** Bounded staging root for a gate: one fixed dir per (query tag,
-    * input dir), wiped at entry, so repeated bench warm-up, timed and
-    * verify runs reuse the same space instead of accumulating a WAL
-    * copy per invocation. Assumes a single runner per input dir per
-    * host: concurrent JVMs on the same dir would need per-run dirs. */
-  private[operators] def stagingRoot(tag: String, dir: String): String = {
-    val stagePath = java.nio.file.Paths.get(stagingPath(tag, dir))
-    if (java.nio.file.Files.exists(stagePath)) {
-      java.nio.file.Files.walk(stagePath)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.delete(p))
-    }
-    stagePath.toString
-  }
 
   /** q73: STREAMING tumbling-window aggregation under the oracle gate
     * — the full WAL through the DSv2 source, counted per (1-hour
@@ -107,16 +57,15 @@ object StreamingOps {
     * the final state is arrival-order independent — what makes this
     * streaming query exactly SQL-replayable (same argument as q53). */
   def windowStream(s: SparkSession, dir: String): DataFrame = {
-    val stage = stagingRoot("q73", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"; val out = s"$stage/out"
-    WalSource.writeWalJson(WalSource.eventsAsWal(s, dir), walDir, batches = 8)
-    val counts = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
+    val stage = Stage("q73", dir)
+    val counts = stage.walStream(WalSource.eventsAsWal(s, dir),
+      batches = 8, maxFilesPerTrigger = 2).open(s)
       .withColumn("event_time", timestamp_micros(col("ts")))
       .withColumn("event_type", col("cells")(0)("qualifier"))
       .withColumn("value", col("cells")(0)("value").cast("double"))
       .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-    StreamGate.toParquet(s, counts, ckpt, out, OutputMode.Complete())
+    stage.toParquet(counts, OutputMode.Complete())
       .select(unix_micros(col("window.start")).as("window_start"),
         col("event_type"), col("n"), round(col("sum_value"), 2).as("sum_value"))
   }
@@ -133,17 +82,16 @@ object StreamingOps {
     * exactly 30 min starts a new session — hence the `>=` in the
     * oracle where q14's gap logic uses strict `>`. */
   def sessionStream(s: SparkSession, dir: String): DataFrame = {
-    val stage = stagingRoot("q78", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"; val out = s"$stage/out"
+    val stage = Stage("q78", dir)
     val puts = WalSource.eventsAsWal(s, dir)
       .filter(col("cells")(0)("kind") === "put")
-    WalSource.writeWalJson(puts, walDir, batches = 8)
-    val sessions = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
+    val sessions = stage.walStream(puts,
+      batches = 8, maxFilesPerTrigger = 2).open(s)
       .withColumn("event_time", timestamp_micros(col("ts")))
       .groupBy(col("rowkey"), session_window(col("event_time"), "30 minutes"))
       .agg(count(lit(1)).as("n"))
       .select(col("rowkey"), col("n"))
-    StreamGate.toParquet(s, sessions, ckpt, out, OutputMode.Complete())
+    stage.toParquet(sessions, OutputMode.Complete())
       .groupBy(col("rowkey").cast("long").as("user_id"))
       .agg(count(lit(1)).as("n_sessions"), sum(col("n")).as("n_events"))
   }
@@ -159,17 +107,16 @@ object StreamingOps {
     * API without ever evicting; production tightens it to the real
     * out-of-orderness bound so join state stays finite. */
   def intervalJoinStream(s: SparkSession, dir: String): DataFrame = {
-    val stage = stagingRoot("q80", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"; val out = s"$stage/out"
+    val stage = Stage("q80", dir)
     val subset = WalSource.eventsAsWal(s, dir)
       .filter(col("cells")(0)("qualifier").isin("click", "purchase"))
-    WalSource.writeWalJson(subset, walDir, batches = 6)
     // 2 micro-batches (6 segments / 3 per trigger): enough to prove
     // cross-batch join state, half the per-batch state-store snapshot
     // cost of finer batching (each batch snapshots 4 join state
     // stores x shuffle partitions)
+    val wal = stage.walStream(subset, batches = 6, maxFilesPerTrigger = 3)
     def side(q: String): DataFrame =
-      WalSource.streamV2(s, walDir, maxFilesPerTrigger = 3)
+      wal.open(s)
         .filter(col("cells")(0)("qualifier") === q)
         .withColumn("event_time", timestamp_micros(col("ts")))
     val clicks = side("click")
@@ -185,7 +132,7 @@ object StreamingOps {
         col("click_time") >= col("purchase_time") - expr("INTERVAL 1 HOUR") &&
         col("click_time") <= col("purchase_time"))
       .select(col("rowkey"), col("purchase_seq"), col("click_seq"))
-    StreamGate.toParquet(s, joined, ckpt, out, OutputMode.Append())
+    stage.toParquet(joined, OutputMode.Append())
       // idempotence under any foreachBatch retry/replay
       .dropDuplicates("purchase_seq", "click_seq")
       .groupBy(col("rowkey").cast("long").as("user_id"))
@@ -203,17 +150,16 @@ object StreamingOps {
     * reference data. Counting is commutative, so the final state
     * replays as the batch join SQL. */
   def streamEnrich(s: SparkSession, dir: String): DataFrame = {
-    val stage = stagingRoot("q84", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"; val out = s"$stage/out"
-    WalSource.writeWalJson(WalSource.eventsAsWal(s, dir), walDir, batches = 8)
+    val stage = Stage("q84", dir)
     val dim = graft.Tables.customer(s, dir)
       .select(col("c_custkey").cast("string").as("rowkey"), col("c_mktsegment"))
-    val counts = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
+    val counts = stage.walStream(WalSource.eventsAsWal(s, dir),
+      batches = 8, maxFilesPerTrigger = 2).open(s)
       .join(broadcast(dim), "rowkey")
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_mutations"),
         sum(size(col("cells")).cast("long")).as("n_cells"))
-    StreamGate.toParquet(s, counts, ckpt, out, OutputMode.Complete())
+    stage.toParquet(counts, OutputMode.Complete())
   }
 
   /** q86: STREAMING effectively-once under the oracle gate — the WAL
@@ -224,19 +170,17 @@ object StreamingOps {
     * Final counts must equal single delivery — q76 proves the batch
     * contract, this proves the streaming operator itself. */
   def streamDedupe(s: SparkSession, dir: String): DataFrame = {
-    val stage = stagingRoot("q86", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"; val out = s"$stage/out"
+    val stage = Stage("q86", dir)
     val wal = WalSource.eventsAsWal(s, dir)
     // at-least-once delivery: every mutation shipped twice; 3
     // micro-batches keep the cross-batch dedup state exercised
     // without paying a per-batch state-store snapshot 8 times over
     // the double-sized WAL
-    WalSource.writeWalJson(wal.union(wal), walDir, batches = 6)
-    val perKey = graft.streaming.ExactlyOnce.dedupe(
-        WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2))
+    val perKey = graft.streaming.ExactlyOnce.dedupe(stage.walStream(
+        wal.union(wal), batches = 6, maxFilesPerTrigger = 2).open(s))
       .groupBy(col("table"), col("rowkey"))
       .agg(count(lit(1)).as("n"))
-    StreamGate.toParquet(s, perKey, ckpt, out, OutputMode.Complete())
+    stage.toParquet(perKey, OutputMode.Complete())
       .groupBy(col("table"))
       .agg(sum(col("n")).as("n_mutations"), count(lit(1)).as("n_keys"))
   }
@@ -251,16 +195,15 @@ object StreamingOps {
     * asserted in prose. */
   def replayOutOfOrder(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{col => c}
-    val stage = stagingRoot("q87", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"; val out = s"$stage/out"
+    val stage = Stage("q87", dir)
     val puts = WalSource.eventsAsWal(s, dir)
       .filter(c("cells")(0)("kind") === "put")
     // reverse event-time order across segments: range-partition on -seq
     puts.withColumn("negseq", -c("seq"))
       .repartitionByRange(8, c("negseq")).drop("negseq")
-      .toJSON.write.mode("overwrite").text(walDir)
-    finalStates(s, graft.sources.GraftWalStream(walDir, maxFilesPerTrigger = 2),
-      out, ckpt)
+      .toJSON.write.mode("overwrite").text(stage.wal)
+    finalStatesOf(s, WalSource.streamV2(s, stage.wal, maxFilesPerTrigger = 2))(
+      stage.toParquet(_, OutputMode.Update()))
   }
 
   /** q69: the SepModel subscription surface under the oracle gate —
@@ -278,15 +221,10 @@ object StreamingOps {
     import graft.streaming.Subscription
     val wal = WalSource.eventsAsWal(s, dir)
     val entries = array(auditSubscriptions.map { sub =>
-      val narrowed = (sub.family, sub.qualifier) match {
-        case (None, None) => col("cells")
-        case _ => filter(col("cells"), c =>
-          sub.family.map(c.getField("family") === _).getOrElse(lit(true)) &&
-            sub.qualifier.map(c.getField("qualifier") === _).getOrElse(lit(true)))
-      }
       // null n_cells = mutation invisible to this subscription
       struct(lit(sub.name).as("subscription"),
-        when(sub.predicate, size(narrowed).cast("long")).as("n_cells"))
+        when(sub.predicate, size(sub.narrow(col("cells"))).cast("long"))
+          .as("n_cells"))
     }: _*)
     wal.select(col("rowkey"), explode(entries).as("e"))
       .filter(col("e.n_cells").isNotNull)
@@ -405,16 +343,15 @@ object StreamingOps {
   def streamDebounce(s: SparkSession, dir: String,
       gapMicros: Long = 3600000000L): DataFrame = {
     import s.implicits._
-    val stage = stagingRoot("q269", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"; val out = s"$stage/out"
-    WalSource.writeWalJson(WalSource.eventsAsWal(s, dir), walDir, batches = 6)
-    val evs = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
+    val stage = Stage("q269", dir)
+    val evs = stage.walStream(WalSource.eventsAsWal(s, dir),
+      batches = 6, maxFilesPerTrigger = 2).open(s)
       .select(col("rowkey").as("user"),
         col("cells")(0)("qualifier").as("kind"),
         col("ts"), col("seq").as("id"))
       .as[graft.streaming.Debounce.Ev]
-    StreamGate.toParquet(s, graft.streaming.Debounce.track(s, evs, gapMicros),
-      ckpt, out, OutputMode.Update())
+    stage.toParquet(graft.streaming.Debounce.track(s, evs, gapMicros),
+      OutputMode.Update())
       .groupBy(col("user"), col("kind"))
       .agg(max_by(struct(col("n_events"), col("n_dropped")), col("batch"))
         .as("st"))
@@ -436,18 +373,17 @@ object StreamingOps {
     * q262's batch read row-for-row under the same oracle. */
   def streamMaxVersions(s: SparkSession, dir: String, k: Int = 3): DataFrame = {
     import s.implicits._
-    val stage = stagingRoot("q270", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"; val out = s"$stage/out"
-    WalSource.writeWalJson(WalSource.eventsAsWal(s, dir), walDir, batches = 6)
-    val cells = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
+    val stage = Stage("q270", dir)
+    val cells = stage.walStream(WalSource.eventsAsWal(s, dir),
+      batches = 6, maxFilesPerTrigger = 2).open(s)
       .select(col("rowkey").as("user"),
         col("cells")(0)("qualifier").as("qualifier"),
         col("ts"), col("seq"),
         expr("cast(round(cast(cells[0].value as double) * 100) as bigint)")
           .as("value_cents"))
       .as[graft.streaming.MaxVersions.Cell]
-    StreamGate.toParquet(s, graft.streaming.MaxVersions.track(s, cells, k),
-      ckpt, out, OutputMode.Update())
+    stage.toParquet(graft.streaming.MaxVersions.track(s, cells, k),
+      OutputMode.Update())
       .groupBy(col("user"), col("qualifier"), col("version"))
       .agg(max_by(struct(col("ts"), col("value_cents"), col("seq")),
         col("batch")).as("st"))
@@ -472,13 +408,11 @@ object StreamingOps {
     * from the staged corpus (deterministic). */
   def streamBitmaskRetention(s: SparkSession, dir: String,
       horizon: Int = 7): DataFrame = {
-    val stage = stagingRoot("q283", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"
-    val out = s"$stage/out"
-    WalSource.writeWalJson(WalSource.eventsAsWal(s, dir), walDir, batches = 6)
+    val stage = Stage("q283", dir)
     val d0 = graft.Tables.events(s, dir)
       .agg(min(expr("ts div 86400000000"))).head().getLong(0)
-    val masks = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
+    val masks = stage.walStream(WalSource.eventsAsWal(s, dir),
+      batches = 6, maxFilesPerTrigger = 2).open(s)
       .select(col("rowkey").cast("long").as("user_id"),
         (expr("ts div 86400000000") - lit(d0)).as("d"))
       .filter(col("d") >= 0L && col("d") < 63L)
@@ -486,7 +420,7 @@ object StreamingOps {
       .agg(min(col("d")).as("cohort"),
         expr("bit_or(shiftleft(cast(1 as bigint), cast(d as int)))")
           .as("mask"))
-    val fin = StreamGate.toParquet(s, masks, ckpt, out, OutputMode.Update())
+    val fin = stage.toParquet(masks, OutputMode.Update())
       .groupBy(col("user_id"))
       .agg(max_by(struct(col("cohort"), col("mask")), col("batch")).as("st"))
       .select(col("st.cohort").as("cohort"), col("st.mask").as("mask"))
@@ -507,16 +441,14 @@ object StreamingOps {
     * over distinct hashes). State: O(k) longs per qualifier,
     * forever. */
   def streamKmv(s: SparkSession, dir: String, k: Int = 16): DataFrame = {
-    val stage = stagingRoot("q286", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"
-    val out = s"$stage/out"
-    WalSource.writeWalJson(WalSource.eventsAsWal(s, dir), walDir, batches = 6)
-    val sketches = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
+    val stage = Stage("q286", dir)
+    val sketches = stage.walStream(WalSource.eventsAsWal(s, dir),
+      batches = 6, maxFilesPerTrigger = 2).open(s)
       .select(col("cells")(0)("qualifier").as("qualifier"),
         Sampling.hashBucket(concat(lit("kmv|"), col("rowkey"))).as("h"))
       .groupBy(col("qualifier"))
       .agg(graft.functions.KMin.kmin(k)(col("h")).as("kmv"))
-    val fin = StreamGate.toParquet(s, sketches, ckpt, out, OutputMode.Update())
+    val fin = stage.toParquet(sketches, OutputMode.Update())
       .groupBy(col("qualifier"))
       .agg(max_by(col("kmv"), col("batch")).as("kmv"))
     val exact = graft.Tables.events(s, dir)
@@ -557,19 +489,17 @@ object StreamingOps {
     * exact corpus pass against the broadcast estimate grid. */
   def streamKll(s: SparkSession, dir: String, cap: Int = 400): DataFrame = {
     import graft.functions.{KllAgg, KllSketch}
-    val stage = stagingRoot("q340", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"
-    val out = s"$stage/out"
-    WalSource.writeWalJson(WalSource.eventsAsWal(s, dir), walDir, batches = 6)
+    val stage = Stage("q340", dir)
     val kll = udaf(new KllAgg(cap))
-    val sketches = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
+    val sketches = stage.walStream(WalSource.eventsAsWal(s, dir),
+      batches = 6, maxFilesPerTrigger = 2).open(s)
       .select(col("cells")(0)("qualifier").as("qualifier"),
         expr("cast(round(cast(cells[0].value as double) * 100) as bigint)")
           .as("c"))
       .groupBy(col("qualifier"))
       .agg(kll(col("c")).as("sk"))
     // metadata-sized collect: one sketch row per event type
-    val fin = StreamGate.toParquet(s, sketches, ckpt, out, OutputMode.Update())
+    val fin = stage.toParquet(sketches, OutputMode.Update())
       .groupBy(col("qualifier"))
       .agg(max_by(col("sk"), col("batch")).as("sk"))
       .collect()
@@ -629,17 +559,16 @@ object StreamingOps {
   def ttlMaterialize(s: SparkSession, dir: String,
       ttlMillis: Long = 28800000L): DataFrame = {
     import s.implicits._
-    val stage = stagingRoot("q83", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"; val out = s"$stage/out"
+    val stage = Stage("q83", dir)
     val puts = WalSource.eventsAsWal(s, dir)
       .filter(col("cells")(0)("kind") === "put")
     // 3 data micro-batches + the final timeout batch: the watermark
     // must advance across batches for mid-stream evictions to stay
     // exercised, but each batch snapshots the state store — 6/2 is
     // the cost-coverage balance
-    WalSource.writeWalJson(puts, walDir, batches = 6)
-    finalStates(s, graft.sources.GraftWalStream(walDir, maxFilesPerTrigger = 2),
-      out, ckpt, ttlMillis = Some(ttlMillis))
+    finalStatesOf(s, stage.walStream(puts, batches = 6,
+        maxFilesPerTrigger = 2).open(s), ttlMillis = Some(ttlMillis))(
+      stage.toParquet(_, OutputMode.Update()))
   }
 
   /** q100: q53's streaming materialization on the ROCKSDB state-store
@@ -650,13 +579,12 @@ object StreamingOps {
     * equality); this puts that claim under the DuckDB gate instead
     * of spec-only, so a provider regression fails the round. */
   def rocksDbMaterialize(s: SparkSession, dir: String): DataFrame = {
-    val stage = stagingRoot("q100", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"; val out = s"$stage/out"
+    val stage = Stage("q100", dir)
     val puts = WalSource.eventsAsWal(s, dir)
       .filter(col("cells")(0)("kind") === "put")
-    WalSource.writeWalJson(puts, walDir, batches = 8)
-    finalStates(s, graft.sources.GraftWalStream(walDir, maxFilesPerTrigger = 2),
-      out, ckpt, rocksDB = true)
+    finalStatesOf(s, stage.walStream(puts, batches = 8,
+        maxFilesPerTrigger = 2).open(s), rocksDB = true)(
+      stage.toParquet(_, OutputMode.Update()))
   }
 
   /** q95: STREAMING funnel under the oracle gate — view/purchase puts
@@ -669,18 +597,17 @@ object StreamingOps {
     * user per batch; the last emission wins via the batch tag. */
   def streamFunnel(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val stage = stagingRoot("q95", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"; val out = s"$stage/out"
+    val stage = Stage("q95", dir)
     val subset = WalSource.eventsAsWal(s, dir)
       .filter(col("cells")(0)("kind") === "put" &&
         col("cells")(0)("qualifier").isin("view", "purchase"))
-    WalSource.writeWalJson(subset, walDir, batches = 6)
-    val evs = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
+    val evs = stage.walStream(subset,
+      batches = 6, maxFilesPerTrigger = 2).open(s)
       .select(col("rowkey").as("_1"),
         col("cells")(0)("qualifier").as("_2"), col("ts").as("_3"))
       .as[(String, String, Long)]
-    StreamGate.toParquet(s, graft.streaming.Funnel.track(s, evs),
-      ckpt, out, OutputMode.Update())
+    stage.toParquet(graft.streaming.Funnel.track(s, evs),
+      OutputMode.Update())
       .groupBy(col("user_id"))
       .agg(max_by(struct(col("first_view"), col("conv_ts")), col("batch")).as("st"))
       .select(col("user_id").cast("long").as("user_id"),
@@ -710,13 +637,12 @@ object StreamingOps {
     * (emit iff matched OR p_ts < joint), measured empirically and
     * pinned by the gate at every SF. */
   def leftOuterJoinStream(s: SparkSession, dir: String): DataFrame = {
-    val stage = stagingRoot("q121", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"; val out = s"$stage/out"
+    val stage = Stage("q121", dir)
     val subset = WalSource.eventsAsWal(s, dir)
       .filter(col("cells")(0)("qualifier").isin("click", "purchase"))
-    WalSource.writeWalJson(subset, walDir, batches = 6)
+    val wal = stage.walStream(subset, batches = 6, maxFilesPerTrigger = 3)
     def side(q: String): DataFrame =
-      WalSource.streamV2(s, walDir, maxFilesPerTrigger = 3)
+      wal.open(s)
         .filter(col("cells")(0)("qualifier") === q)
         .withColumn("event_time", timestamp_micros(col("ts")))
     val clicks = side("click")
@@ -733,7 +659,7 @@ object StreamingOps {
           col("click_time") <= col("purchase_time"),
         "leftOuter")
       .select(col("rowkey"), col("purchase_seq"), col("click_seq"))
-    StreamGate.toParquet(s, joined, ckpt, out, OutputMode.Append())
+    stage.toParquet(joined, OutputMode.Append())
       .dropDuplicates("purchase_seq", "click_seq")
       .groupBy(col("rowkey").cast("long").as("user_id"))
       .agg(countDistinct(col("purchase_seq")).as("n_purchases"),
@@ -758,13 +684,12 @@ object StreamingOps {
     * bound is the same as the inner join's: the 1-hour window per
     * key, never the stream. */
   def fullOuterJoinStream(s: SparkSession, dir: String): DataFrame = {
-    val stage = stagingRoot("q274", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"; val out = s"$stage/out"
+    val stage = Stage("q274", dir)
     val subset = WalSource.eventsAsWal(s, dir)
       .filter(col("cells")(0)("qualifier").isin("click", "purchase"))
-    WalSource.writeWalJson(subset, walDir, batches = 6)
+    val wal = stage.walStream(subset, batches = 6, maxFilesPerTrigger = 3)
     def side(q: String): DataFrame =
-      WalSource.streamV2(s, walDir, maxFilesPerTrigger = 3)
+      wal.open(s)
         .filter(col("cells")(0)("qualifier") === q)
         .withColumn("event_time", timestamp_micros(col("ts")))
     val clicks = side("click")
@@ -782,7 +707,7 @@ object StreamingOps {
         "fullOuter")
       .select(coalesce(col("rowkey"), col("c_rowkey")).as("user_key"),
         col("purchase_seq"), col("click_seq"))
-    StreamGate.toParquet(s, joined, ckpt, out, OutputMode.Append())
+    stage.toParquet(joined, OutputMode.Append())
       // idempotence under any foreachBatch retry/replay; null seqs
       // (outer rows) keep one row per (purchase, click) identity
       .dropDuplicates("purchase_seq", "click_seq")
@@ -810,15 +735,14 @@ object StreamingOps {
     * built-in). */
   def streamTopK(s: SparkSession, dir: String, k: Int = 3): DataFrame = {
     import graft.functions.TopK
-    val stage = stagingRoot("q116", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"; val out = s"$stage/out"
-    WalSource.writeWalJson(WalSource.eventsAsWal(s, dir), walDir, batches = 8)
-    val tops = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
+    val stage = Stage("q116", dir)
+    val tops = stage.walStream(WalSource.eventsAsWal(s, dir),
+      batches = 8, maxFilesPerTrigger = 2).open(s)
       .withColumn("event_time", timestamp_micros(col("ts")))
       .withColumn("value", col("cells")(0)("value").cast("double"))
       .groupBy(window(col("event_time"), "1 day"))
       .agg(TopK.topk(k)(col("seq"), col("value")).as("top"))
-    StreamGate.toParquet(s, tops, ckpt, out, OutputMode.Complete())
+    stage.toParquet(tops, OutputMode.Complete())
       .select(unix_micros(col("window.start")).as("window_start"),
         posexplode(col("top")).as(Seq("pos", "t")))
       .select(col("window_start"), (col("pos") + 1).cast("long").as("rank"),
@@ -851,13 +775,12 @@ object StreamingOps {
   def funnelTtlStream(s: SparkSession, dir: String,
       ttlMillis: Long = 60000000L): DataFrame = {
     import s.implicits._
-    val stage = stagingRoot("q115", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"; val out = s"$stage/out"
+    val stage = Stage("q115", dir)
     val subset = WalSource.eventsAsWal(s, dir)
       .filter(col("cells")(0)("kind") === "put" &&
         col("cells")(0)("qualifier").isin("view", "purchase"))
-    WalSource.writeWalJson(subset, walDir, batches = 2)
-    val evs = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
+    val evs = stage.walStream(subset,
+      batches = 2, maxFilesPerTrigger = 2).open(s)
       .select(col("rowkey").as("user"),
         col("cells")(0)("qualifier").as("etype"), col("ts"))
       .withColumn("event_time", timestamp_micros(col("ts")))
@@ -865,9 +788,8 @@ object StreamingOps {
       .as[graft.streaming.Funnel.FunnelEvent]
     // all data lands in batch 0, so any later emission is a flush:
     // evicted = touched by a timeout batch
-    StreamGate.toParquet(s,
-      graft.streaming.Funnel.trackWithTTL(s, evs, ttlMillis),
-      ckpt, out, OutputMode.Update())
+    stage.toParquet(graft.streaming.Funnel.trackWithTTL(s, evs, ttlMillis),
+      OutputMode.Update())
       .groupBy(col("user_id"))
       .agg(max_by(struct(col("first_view"), col("conv_ts")), col("batch")).as("st"),
         max(col("batch")).as("mb"))
@@ -890,16 +812,15 @@ object StreamingOps {
     * (the q73 argument). State: one row of |types| counters per user,
     * merged incrementally across micro-batches. */
   def streamPivot(s: SparkSession, dir: String): DataFrame = {
-    val stage = stagingRoot("q123", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"; val out = s"$stage/out"
-    WalSource.writeWalJson(WalSource.eventsAsWal(s, dir), walDir, batches = 8)
+    val stage = Stage("q123", dir)
     val types = Seq("click", "view", "purchase", "signup", "error")
     val q = col("cells")(0)("qualifier")
     val typeCounts = types.map(t => sum(when(q === t, 1L).otherwise(0L)).as(t))
-    val counts = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
+    val counts = stage.walStream(WalSource.eventsAsWal(s, dir),
+      batches = 8, maxFilesPerTrigger = 2).open(s)
       .groupBy(col("rowkey"))
       .agg(typeCounts.head, typeCounts.tail: _*)
-    StreamGate.toParquet(s, counts, ckpt, out, OutputMode.Complete())
+    stage.toParquet(counts, OutputMode.Complete())
       .select(col("rowkey").cast("long").as("user_id") +:
         types.map(t => col(t)): _*)
   }
@@ -917,15 +838,14 @@ object StreamingOps {
     * sketch). The estimate + exact audit run batch-side on the final
     * 256-row-per-type register table. */
   def streamHll(s: SparkSession, dir: String): DataFrame = {
-    val stage = stagingRoot("q131", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"; val out = s"$stage/out"
-    WalSource.writeWalJson(WalSource.eventsAsWal(s, dir), walDir, batches = 8)
-    val keyed = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
+    val stage = Stage("q131", dir)
+    val keyed = stage.walStream(WalSource.eventsAsWal(s, dir),
+      batches = 8, maxFilesPerTrigger = 2).open(s)
       .select(col("cells")(0)("qualifier").as("event_type"),
         col("rowkey").as("k"))
     val regs = Sketch.hllRegistersBy(keyed, "event_type")
     val est = Sketch.hllEstimate(
-      StreamGate.toParquet(s, regs, ckpt, out, OutputMode.Complete()),
+      stage.toParquet(regs, OutputMode.Complete()),
       "event_type")
     val exact = graft.Tables.events(s, dir)
       .groupBy(col("event_type"))
@@ -1009,10 +929,9 @@ object StreamingOps {
     * batch aggregate (q126's oracle) regardless of batching — upsert
     * latest-wins per key makes the sink idempotent per batch. */
   def streamUpsertView(s: SparkSession, dir: String): DataFrame = {
-    val stage = stagingRoot("q140", dir)
-    val walDir = s"$stage/wal"
-    WalSource.writeWalJson(WalSource.eventsAsWal(s, dir), walDir, batches = 8)
-    val totals = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
+    val stage = Stage("q140", dir)
+    val totals = stage.walStream(WalSource.eventsAsWal(s, dir),
+      batches = 8, maxFilesPerTrigger = 2).open(s)
       .select(col("rowkey").cast("long").as("user_id"),
         col("cells")(0)("qualifier").as("event_type"),
         round(col("cells")(0)("value").cast("double") * 100).cast("long").as("cents"))
@@ -1025,11 +944,10 @@ object StreamingOps {
     * `stage`: each batch's touched (user_id, event_type) keys replace
     * their old rows, rows failing `keep` are dropped, and the final
     * view is read back with the stream's schema. */
-  private def upsertView(s: SparkSession, stage: String, totals: DataFrame,
+  private def upsertView(s: SparkSession, stage: Stage, totals: DataFrame,
       keep: Column): DataFrame = {
-    StreamGate.run(s, totals, s"$stage/ckpt", OutputMode.Update()) {
-      (touched, id) =>
-        val merged = currentViewDir(stage) match {
+    stage.run(totals, OutputMode.Update()) { (touched, id) =>
+        val merged = currentViewDir(stage.root) match {
           case Some(cur) =>
             s.read.schema(totals.schema).parquet(cur)
               .join(touched.select(col("user_id"), col("event_type")),
@@ -1037,10 +955,10 @@ object StreamingOps {
               .unionByName(touched)
           case None => touched
         }
-        publishView(stage, merged.filter(keep), id)
+        publishView(stage.root, merged.filter(keep), id)
     }
-    s.read.schema(totals.schema).parquet(currentViewDir(stage).getOrElse(
-      sys.error(s"$stage: no view version published")))
+    s.read.schema(totals.schema).parquet(currentViewDir(stage.root)
+      .getOrElse(sys.error(s"${stage.root}: no view version published")))
   }
 
   /** q299: STREAMING RETRACTION IVM (round-10, VERDICT Next #4) —
@@ -1075,7 +993,7 @@ object StreamingOps {
     val retractions = mutation(
       ev.filter(col("event_id") % 7 === 0 && col("ts") < cutoffMicros),
       "delete", col("event_id") + lit(maxSeq + 1L))
-    streamIvmRetractOf(s, stagingRoot("q299", dir),
+    streamIvmRetractOf(s, Stage("q299", dir).root,
       inserts.unionByName(retractions))
   }
 
@@ -1100,30 +1018,29 @@ object StreamingOps {
     * state cardinality — retention lost nothing). */
   def sepLifecycle(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val stage = stagingRoot("q314", dir)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stage))
-    val reg = new graft.streaming.SubscriptionRegistry(s"$stage/registry.json")
+    val stage = Stage("q314", dir)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stage.root))
+    val reg = new graft.streaming.SubscriptionRegistry(
+      stage.path("registry.json"))
     reg.add(graft.streaming.Subscription("clicks", family = Some("e"),
       qualifier = Some("click")))
     reg.add(graft.streaming.Subscription("all"))
     // the logical WAL in both transports: JSONL for the consuming
     // stream, parquet segments for the compactor (the shipped form —
     // same seq space, seq = event_id)
-    val walJson = s"$stage/walj"; val walParquet = s"$stage/walp"
-    WalSource.writeWalJson(WalSource.eventsAsWal(s, dir), walJson, batches = 6)
-    WalRetention.stageWal(s, dir, walParquet)
+    val walJson = stage.walStream(WalSource.eventsAsWal(s, dir),
+      batches = 6, maxFilesPerTrigger = 2)
+    val wal = WalRetention.stageWal(s, dir, stage, "segments")
+      .select(col("seq"), col("ts")).localCheckpoint()
     Seq("clicks", "all").foreach { name =>
-      consumeAndAck(s, graft.sources.GraftWalStream(walJson,
-        maxFilesPerTrigger = 2), reg, name, s"$stage/ckpt_$name")()
+      consumeAndAck(s, walJson, reg, name, stage.sub(name).ckpt)()
     }
-    val wal = s.read.parquet(walParquet).select(col("seq"), col("ts"))
-      .localCheckpoint()
+    val walParquet = stage.path("segments"); val snapRoot = stage.path("snap")
     val (boundary, _, _) = WalRetention.compactToAcks(s, walParquet,
-      s"$stage/snap", reg)
+      snapRoot, reg)
     val snapKeys = s.read.parquet(
-      WalRetention.currentSnapshot(s"$stage/snap").get).count()
-    val stateRows = WalRetention.stateAsOf(s, walParquet, s"$stage/snap")
-      .count()
+      WalRetention.currentSnapshot(snapRoot).get).count()
+    val stateRows = WalRetention.stateAsOf(s, walParquet, snapRoot).count()
     val acks = reg.acks()
     val subsDf = Seq("clicks", "all").map(n => (n, acks(n)))
       .toDF("subscription", "ack_seq")
@@ -1143,10 +1060,10 @@ object StreamingOps {
     * at small SF. */
   private[graft] def streamIvmRetractOf(s: SparkSession, stage: String,
       mutations: DataFrame): DataFrame = {
-    val walDir = s"$stage/wal"
-    WalSource.writeWalJson(mutations, walDir, batches = 8)
+    val st = Stage.at(stage)
     val mult = when(col("cells")(0)("kind") === "delete", -1L).otherwise(1L)
-    val totals = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
+    val totals = st.walStream(mutations, batches = 8,
+        maxFilesPerTrigger = 2).open(s)
       .select(col("rowkey").cast("long").as("user_id"),
         col("cells")(0)("qualifier").as("event_type"),
         (mult * round(col("cells")(0)("value").cast("double") * 100)
@@ -1156,7 +1073,7 @@ object StreamingOps {
       .agg(sum(col("mult")).as("n_events"),
         sum(col("signed_cents")).as("sum_cents"))
     // Z-relation: a group whose support hits zero is a sink tombstone
-    upsertView(s, stage, totals, keep = col("n_events") > 0L)
+    upsertView(s, st, totals, keep = col("n_events") > 0L)
   }
 
   /** Run any [[graft.sources.WalStream]] transport to exhaustion
@@ -1173,7 +1090,15 @@ object StreamingOps {
     * see [[ttlMaterialize]]). */
   def finalStates(s: SparkSession, wal: graft.sources.WalStream,
       out: String, ckpt: String, rocksDB: Boolean = false,
-      ttlMillis: Option[Long] = None): DataFrame = {
+      ttlMillis: Option[Long] = None): DataFrame =
+    finalStatesOf(s, wal.open(s), rocksDB, ttlMillis)(
+      StreamGate.toParquet(s, _, ckpt, out, OutputMode.Update()))
+
+  /** [[finalStates]] over an opened WAL stream; `gate` drains the
+    * state stream into parquet and returns its read-back. */
+  private def finalStatesOf(s: SparkSession, wal: DataFrame,
+      rocksDB: Boolean = false, ttlMillis: Option[Long] = None)
+      (gate: DataFrame => DataFrame): DataFrame = {
     import s.implicits._
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val prior = s.conf.getOption(providerKey)
@@ -1181,16 +1106,16 @@ object StreamingOps {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val states = ttlMillis match {
       case Some(ttl) =>
-        val withTime = wal.open(s)
+        val withTime = wal
           .withColumn("event_time", timestamp_micros(col("ts")))
           .withWatermark("event_time", "0 seconds")
           .as[Mutation]
         RowMaterializer.materializeWithTTL(s, withTime, ttl)
       case None =>
-        RowMaterializer.materialize(s, wal.open(s).as[Mutation])
+        RowMaterializer.materialize(s, wal.as[Mutation])
     }
     val emitted =
-      try StreamGate.toParquet(s, states, ckpt, out, OutputMode.Update())
+      try gate(states.toDF())
       finally if (rocksDB) prior match {
         case Some(v) => s.conf.set(providerKey, v)
         case None => s.conf.unset(providerKey)
@@ -1302,10 +1227,11 @@ object StreamingOps {
     * id per day). Dedup-first makes the final counts arrival-order
     * independent ⇒ SQL-replayable (the q53 argument). */
   def streamActiveUsers(s: SparkSession, dir: String): DataFrame = {
-    val stage = stagingRoot("q208", dir)
-    WalSource.writeWalJson(WalSource.eventsAsWal(s, dir), s"$stage/wal", batches = 8)
-    runStreamActiveUsers(s, s"$stage/wal", s"$stage/ckpt", s"$stage/out",
+    val stage = Stage("q208", dir)
+    val wal = stage.walStream(WalSource.eventsAsWal(s, dir), batches = 8,
       maxFilesPerTrigger = 2)
+    runStreamActiveUsers(s, wal.dir, stage.ckpt, stage.out,
+      wal.maxFilesPerTrigger)
   }
 
   /** The q208 pipeline against an existing WAL dir + checkpoint —
@@ -1325,7 +1251,8 @@ object StreamingOps {
       .dropDuplicates("user_id", "day")
       .groupBy(col("day"))
       .agg(count(lit(1)).as("dau"))
-    StreamGate.toParquet(s, dau, ckpt, out, OutputMode.Complete())
+    StreamGate.toParquet(s, dau, ckpt, out, OutputMode.Complete(),
+      Stage.bytes(walDir))
   }
 
   /** q221: STREAMING admission QUOTA — at most 5 events per (user,
@@ -1342,10 +1269,11 @@ object StreamingOps {
     * per-hour report then aggregates the per-key finals (bounded by
     * active (user, hour) keys, never event volume). */
   def streamQuota(s: SparkSession, dir: String): DataFrame = {
-    val stage = stagingRoot("q221", dir)
-    WalSource.writeWalJson(WalSource.eventsAsWal(s, dir), s"$stage/wal", batches = 8)
-    runStreamQuota(s, s"$stage/wal", s"$stage/ckpt", s"$stage/out",
+    val stage = Stage("q221", dir)
+    val wal = stage.walStream(WalSource.eventsAsWal(s, dir), batches = 8,
       maxFilesPerTrigger = 2)
+    runStreamQuota(s, wal.dir, stage.ckpt, stage.out,
+      wal.maxFilesPerTrigger)
   }
 
   /** The q221 pipeline against an existing WAL/checkpoint — factored
@@ -1361,8 +1289,8 @@ object StreamingOps {
       .select(col("rowkey").cast("long").as("user"),
         expr("ts div 3600000000").as("hour"), col("seq"))
       .as[Quota.QuotaEvent]
-    val finals = StreamGate.toParquet(s, Quota.track(events, limit),
-      ckpt, out, OutputMode.Update())
+    val finals = StreamGate.toParquet(s, Quota.track(events, limit), ckpt,
+        out, OutputMode.Update(), Stage.bytes(walDir))
       .groupBy(col("user"), col("hour"))
       .agg(max_by(struct(col("n"), col("admitted")), col("n")).as("f"))
       .select(col("user"), col("hour"), col("f.n").as("n"),
@@ -1387,10 +1315,11 @@ object StreamingOps {
     * oracle because the staged WAL honors the CDC per-key ordering
     * contract (Scd2Spec drives the violating case). */
   def streamScd2(s: SparkSession, dir: String): DataFrame = {
-    val stage = stagingRoot("q230", dir)
-    WalSource.writeWalJson(WalSource.eventsAsWal(s, dir), s"$stage/wal", batches = 8)
-    runStreamScd2(s, s"$stage/wal", s"$stage/ckpt", s"$stage/out",
+    val stage = Stage("q230", dir)
+    val wal = stage.walStream(WalSource.eventsAsWal(s, dir), batches = 8,
       maxFilesPerTrigger = 2)
+    runStreamScd2(s, wal.dir, stage.ckpt, stage.out,
+      wal.maxFilesPerTrigger)
   }
 
   /** The q230 pipeline against an existing WAL/checkpoint; the raw
@@ -1405,7 +1334,8 @@ object StreamingOps {
         col("cells")(0)("qualifier").as("etype"),
         col("cells")(0)("value").cast("double").as("value"))
       .as[Scd2.Scd2Event]
-    StreamGate.toParquet(s, Scd2.track(events), ckpt, out, OutputMode.Update())
+    StreamGate.toParquet(s, Scd2.track(events), ckpt, out,
+      OutputMode.Update(), Stage.bytes(walDir))
       .filter(col("kind") =!= "late")
       // event_id is the version identity (same-ts versions share a
       // valid_from but never an id); open/closed/replay duplicates
@@ -1487,7 +1417,7 @@ object StreamingOps {
   private val lastPublished =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private def storeKey(root: String, name: String): String =
-    java.nio.file.Paths.get(root).toAbsolutePath.toString + " " + name
+    java.nio.file.Paths.get(root).toAbsolutePath.toString + "\u0000" + name
 
   private def nextStoreVersion(root: String, name: String): Long = {
     val cached = lastPublished.get(storeKey(root, name))
@@ -1788,14 +1718,13 @@ object StreamingOps {
   def streamWalIntegrity(s: SparkSession, dir: String, shards: Int = 8,
       rangeSize: Long = 1L << 20, compactEvery: Int = 4,
       retentionUs: Long = Long.MaxValue): DataFrame = {
-    val stage = stagingRoot("q195", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"
-    val stateRoot = s"$stage/state"
+    val stage = Stage("q195", dir)
+    val stateRoot = stage.path("state")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stateRoot))
-    WalSource.writeWalJson(WalSource.eventsAsWal(s, dir), walDir, batches = 8)
-    val raw = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
+    val raw = stage.walStream(WalSource.eventsAsWal(s, dir),
+      batches = 8, maxFilesPerTrigger = 2).open(s)
       .select(col("seq"), col("ts"))
-    StreamGate.run(s, raw, ckpt, OutputMode.Append()) { (df, id) =>
+    stage.run(raw, OutputMode.Append()) { (df, id) =>
       walLedgerBatch(s, stateRoot, df, id, shards, rangeSize,
         compactEvery, retentionUs)
     }
@@ -1852,21 +1781,20 @@ object StreamingOps {
     * q53/q95/q230). */
   def streamAsofAttribution(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val stage = stagingRoot("q247", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"; val out = s"$stage/out"
+    val stage = Stage("q247", dir)
     val subset = WalSource.eventsAsWal(s, dir)
       .filter(col("cells")(0)("kind") === "put" &&
         col("cells")(0)("qualifier").isin("click", "purchase"))
-    WalSource.writeWalJson(subset, walDir, batches = 6)
-    val evs = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
+    val evs = stage.walStream(subset,
+      batches = 6, maxFilesPerTrigger = 2).open(s)
       .select(col("rowkey").as("user"),
         col("cells")(0)("qualifier").as("kind"),
         col("ts"), col("seq").as("id"))
       .withColumn("event_time", timestamp_micros(col("ts")))
       .withWatermark("event_time", "0 seconds")
       .as[graft.streaming.AsOfStream.Ev]
-    StreamGate.toParquet(s, graft.streaming.AsOfStream.track(s, evs),
-      ckpt, out, OutputMode.Update())
+    stage.toParquet(graft.streaming.AsOfStream.track(s, evs),
+      OutputMode.Update())
       .groupBy(col("purchase_id"))
       .agg(max_by(struct(col("user_id"), col("purchase_ts"),
         col("click_id"), col("click_ts")), col("batch")).as("st"))
@@ -1892,18 +1820,17 @@ object StreamingOps {
     * q163's exact hourly relation. */
   def streamRateSpikes(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val stage = stagingRoot("q252", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"; val out = s"$stage/out"
-    WalSource.writeWalJson(WalSource.eventsAsWal(s, dir), walDir, batches = 6)
-    val evs = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
+    val stage = Stage("q252", dir)
+    val evs = stage.walStream(WalSource.eventsAsWal(s, dir),
+      batches = 6, maxFilesPerTrigger = 2).open(s)
       .select(lit("events").as("series"), col("ts"))
       .withColumn("event_time", timestamp_micros(col("ts")))
       .withWatermark("event_time", "0 seconds")
       .as[graft.streaming.RateMonitor.Ev]
     // finalize-once emissions; distinct absorbs checkpoint-replay
     // duplicates (values are deterministic per hour)
-    StreamGate.toParquet(s, graft.streaming.RateMonitor.track(s, evs),
-      ckpt, out, OutputMode.Append())
+    stage.toParquet(graft.streaming.RateMonitor.track(s, evs),
+      OutputMode.Append())
       .select(col("h"), col("n"), col("s24"), col("ratio_ppm"),
         when(col("spike"), 1L).otherwise(0L).as("spike"))
       .distinct()
@@ -1924,17 +1851,15 @@ object StreamingOps {
     * the batch histogram of the same split, so the PSI table equals
     * the batch computation row for row. */
   def streamPsi(s: SparkSession, dir: String, nb: Int = 12): DataFrame = {
-    val stage = stagingRoot("q364", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"
-    val out = s"$stage/out"
-    WalSource.writeWalJson(WalSource.eventsAsWal(s, dir), walDir, batches = 6)
-    val binned = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
+    val stage = Stage("q364", dir)
+    val binned = stage.walStream(WalSource.eventsAsWal(s, dir),
+      batches = 6, maxFilesPerTrigger = 2).open(s)
       .select(expr("cast(rowkey as bigint) % 2").as("side"),
         least(expr(
           "cast(round(cast(cells[0].value as double) * 100) as bigint)" +
             " div 2000"), lit(nb - 1L)).as("bin"))
       .groupBy(col("side"), col("bin")).agg(count(lit(1)).as("n"))
-    val hist = StreamGate.toParquet(s, binned, ckpt, out, OutputMode.Update())
+    val hist = stage.toParquet(binned, OutputMode.Update())
       .groupBy(col("side"), col("bin"))
       .agg(max_by(col("n"), col("batch")).as("n"))
     val bins = s.range(nb).select(col("id").as("bin"))
@@ -1971,19 +1896,17 @@ object StreamingOps {
   def streamHeavyHitters(s: SparkSession, dir: String, k: Int = 32,
       top: Int = 3): DataFrame = {
     import graft.functions.{MisraGriesAgg, MgSketch}
-    val stage = stagingRoot("q369", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"
-    val out = s"$stage/out"
-    WalSource.writeWalJson(WalSource.eventsAsWal(s, dir), walDir, batches = 6)
+    val stage = Stage("q369", dir)
     val mg = udaf(new MisraGriesAgg(k))
-    val sketches = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
+    val sketches = stage.walStream(WalSource.eventsAsWal(s, dir),
+      batches = 6, maxFilesPerTrigger = 2).open(s)
       .select(col("cells")(0)("qualifier").as("qualifier"),
         expr("cast(round(cast(cells[0].value as double) * 100) as bigint)")
           .as("c"))
       .groupBy(col("qualifier"))
       .agg(mg(col("c")).as("sk"))
     // metadata-sized: one sketch row per event type
-    val fin = StreamGate.toParquet(s, sketches, ckpt, out, OutputMode.Update())
+    val fin = stage.toParquet(sketches, OutputMode.Update())
       .groupBy(col("qualifier"))
       .agg(max_by(col("sk"), col("batch")).as("sk"))
       .collect()
@@ -2030,16 +1953,13 @@ object StreamingOps {
     * bounded hour grid, never the event stream. */
   def streamPageHinkley(s: SparkSession, dir: String,
       lambda: Long = 50L): DataFrame = {
-    val stage = stagingRoot("q443", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"
-    val out = s"$stage/out"
-    WalSource.writeWalJson(WalSource.eventsAsWal(s, dir), walDir,
-      batches = 6)
-    val hourly = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
+    val stage = Stage("q443", dir)
+    val hourly = stage.walStream(WalSource.eventsAsWal(s, dir),
+      batches = 6, maxFilesPerTrigger = 2).open(s)
       .select(expr("ts div 3600000000").as("h"))
       .groupBy(col("h")).agg(count(lit(1)).as("x"))
-    val emitted = StreamGate.toParquet(s, hourly,
-      ckpt, out, OutputMode.Update())
+    val emitted = stage.toParquet(hourly,
+      OutputMode.Update())
     Events.pageHinkleyOf(
       emitted.groupBy(col("h"))
         .agg(max_by(col("x"), col("batch")).as("x")),
@@ -2070,17 +1990,14 @@ object StreamingOps {
     * verbatim: the inequality dashboard updates as data lands, no
     * archive rescan. */
   def streamTheil(s: SparkSession, dir: String): DataFrame = {
-    val stage = stagingRoot("q452", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"
-    val out = s"$stage/out"
-    WalSource.writeWalJson(WalSource.eventsAsWal(s, dir), walDir,
-      batches = 6)
-    val cells = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
+    val stage = Stage("q452", dir)
+    val cells = stage.walStream(WalSource.eventsAsWal(s, dir),
+      batches = 6, maxFilesPerTrigger = 2).open(s)
       .select(col("cells")(0)("qualifier").as("event_type"),
         expr("ts div 3600000000").as("h"))
       .groupBy(col("event_type"), col("h"))
       .agg(count(lit(1)).as("x"))
-    val emitted = StreamGate.toParquet(s, cells, ckpt, out, OutputMode.Update())
+    val emitted = stage.toParquet(cells, OutputMode.Update())
     Events.theilHoursOf(
       emitted.groupBy(col("event_type"), col("h"))
         .agg(max_by(col("x"), col("batch")).as("x")))
@@ -2098,18 +2015,15 @@ object StreamingOps {
     * verbatim. */
   def streamSaltAudit(s: SparkSession, dir: String,
       salts: Int = 16): DataFrame = {
-    val stage = stagingRoot("q471", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"
-    val out = s"$stage/out"
-    WalSource.writeWalJson(WalSource.eventsAsWal(s, dir), walDir,
-      batches = 6)
-    val cells = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
+    val stage = Stage("q471", dir)
+    val cells = stage.walStream(WalSource.eventsAsWal(s, dir),
+      batches = 6, maxFilesPerTrigger = 2).open(s)
       .select(pmod(col("rowkey").cast("long"), lit(salts.toLong))
           .as("salt"),
         expr("ts div 3600000000").as("h"))
       .groupBy(col("salt"), col("h"))
       .agg(count(lit(1)).as("n"))
-    val emitted = StreamGate.toParquet(s, cells, ckpt, out, OutputMode.Update())
+    val emitted = stage.toParquet(cells, OutputMode.Update())
     Bucketing.saltAuditFromCells(
       emitted.groupBy(col("salt"), col("h"))
         .agg(max_by(col("n"), col("batch")).as("n")),
@@ -2117,20 +2031,17 @@ object StreamingOps {
   }
 
   def streamGumbelTail(s: SparkSession, dir: String): DataFrame = {
-    val stage = stagingRoot("q447", dir)
-    val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"
-    val out = s"$stage/out"
-    WalSource.writeWalJson(WalSource.eventsAsWal(s, dir), walDir,
-      batches = 6)
-    val blocks = WalSource.streamV2(s, walDir, maxFilesPerTrigger = 2)
+    val stage = Stage("q447", dir)
+    val blocks = stage.walStream(WalSource.eventsAsWal(s, dir),
+      batches = 6, maxFilesPerTrigger = 2).open(s)
       .select(col("cells")(0)("qualifier").as("event_type"),
         expr("ts div 3600000000").as("h"),
         expr("cast(round(cast(cells[0].value as double) * 1000)" +
           " as bigint)").as("vm"))
       .groupBy(col("event_type"), col("h"))
       .agg(max(col("vm")).as("m"))
-    val emitted = StreamGate.toParquet(s, blocks,
-      ckpt, out, OutputMode.Update())
+    val emitted = stage.toParquet(blocks,
+      OutputMode.Update())
     Events.gumbelTailOf(
       emitted.groupBy(col("event_type"), col("h"))
         .agg(max_by(col("m"), col("batch")).as("m")))
@@ -2212,26 +2123,17 @@ object StreamingOps {
     * replayed. */
   def streamIncrementalPageRank(s: SparkSession, dir: String,
       iters: Int = 5): DataFrame = {
-    val stage = stagingRoot("q480", dir)
-    val stateRoot = s"$stage/state"
-    val inDir = s"$stage/in"; val ckpt = s"$stage/ckpt"
+    val stage = Stage("q480", dir)
+    val stateRoot = stage.path("state")
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(stateRoot))
     val edges = Relational.copurchaseEdges(s, dir).localCheckpoint()
     val slice = (col("pa") * 31 + col("pb")) % 20
     initIncrementalPageRank(s, stateRoot, edges.filter(slice >= 3), iters)
-    edges.filter(slice < 3).withColumn("sl", slice)
-      .repartitionByRange(3, col("sl"))
-      .select(col("pa"), col("pb")).toJSON
-      .write.mode("overwrite").text(inDir)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("pa",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("pb",
-        org.apache.spark.sql.types.LongType)))
-    StreamGate.run(s,
-        s.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(inDir),
-        ckpt, OutputMode.Append()) { (df, _) =>
+    val delta = stage.jsonStream("in",
+      edges.filter(slice < 3).select(col("pa"), col("pb")), slice,
+      files = 3, maxFilesPerTrigger = 1)
+    stage.run(delta, OutputMode.Append()) { (df, _) =>
       incrementalPageRankBatch(s, stateRoot, df, iters)
     }
     s.read.parquet(storeBaseDir(stateRoot, "prstate").get)

@@ -1655,27 +1655,16 @@ object TextAnalysis {
     * against the frozen even-half model and appends its predictions;
     * the final confusion matrix must EQUAL batch q388's. */
   def streamNbLangId(s: SparkSession, dir: String): DataFrame = {
-    val stage = StreamingOps.stagingRoot("q401", dir)
-    val stateRoot = s"$stage/state"
-    val inDir = s"$stage/in"; val ckpt = s"$stage/ckpt"
+    val stage = Stage("q401", dir)
+    val stateRoot = stage.path("state")
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(stateRoot))
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"), col("text"))
     publishNbModel(s, stateRoot, docs.filter(col("doc_id") % 2 === 0))
-    docs.filter(col("doc_id") % 2 =!= 0)
-      .repartitionByRange(6, col("doc_id")).toJSON
-      .write.mode("overwrite").text(inDir)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("lang",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    StreamGate.run(s,
-        s.readStream.schema(schema).option("maxFilesPerTrigger", 2).json(inDir),
-        ckpt, OutputMode.Append()) { (df, _) =>
+    val delta = stage.jsonStream("in", docs.filter(col("doc_id") % 2 =!= 0),
+      col("doc_id"), files = 6, maxFilesPerTrigger = 2)
+    stage.run(delta, OutputMode.Append()) { (df, _) =>
       nbClassifyBatch(s, stateRoot, df).write.mode("append")
         .parquet(StreamingOps.storeDeltaDir(stateRoot, "preds"))
     }
@@ -2010,24 +1999,14 @@ object TextAnalysis {
     * stream was batched, replayed, or compacted. */
   def streamUnigramApply(s: SparkSession, dir: String,
       seedMultis: Int = 200, target: Int = 50): DataFrame = {
-    val stage = StreamingOps.stagingRoot("q423", dir)
-    val stateRoot = s"$stage/state"
-    val inDir = s"$stage/in"; val ckpt = s"$stage/ckpt"
+    val stage = Stage("q423", dir)
+    val stateRoot = stage.path("state")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stateRoot))
-    Tables.documents(s, dir).filter(col("doc_id") % 2 =!= 0)
-      .select(col("doc_id"), col("lang"), col("text"))
-      .repartitionByRange(6, col("doc_id")).toJSON
-      .write.mode("overwrite").text(inDir)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("lang",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    StreamGate.run(s,
-        s.readStream.schema(schema).option("maxFilesPerTrigger", 2).json(inDir),
-        ckpt, OutputMode.Append()) { (df, id) =>
+    val delta = stage.jsonStream("in", Tables.documents(s, dir)
+        .filter(col("doc_id") % 2 =!= 0)
+        .select(col("doc_id"), col("lang"), col("text")),
+      col("doc_id"), files = 6, maxFilesPerTrigger = 2)
+    stage.run(delta, OutputMode.Append()) { (df, id) =>
       unigramStreamBatch(s, stateRoot, df, id)
     }
     unigramApplyReport(readStreamVocab(s, stateRoot),

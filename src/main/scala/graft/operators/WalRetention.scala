@@ -39,17 +39,17 @@ import graft.Tables
   * file-count-sized driver loop, not a data pass. */
 object WalRetention {
 
-  /** Stage the events table as a range-partitioned parquet WAL — one
-    * mutation per event (seq = event_id, rowkey = user_id), `segments`
-    * files ordered by seq, standing in for the shipped WAL segment
-    * files a replication sink accumulates. */
-  private[graft] def stageWal(s: SparkSession, dir: String, walDir: String,
-      segments: Int = 8): Unit =
-    Tables.events(s, dir)
+  /** Stage the events table as a range-partitioned parquet WAL under
+    * `name` in `stage` — one mutation per event (seq = event_id,
+    * rowkey = user_id), 8 files ordered by seq, standing in for the
+    * shipped WAL segment files a replication sink accumulates — and
+    * return its read-back. */
+  private[graft] def stageWal(s: SparkSession, dir: String, stage: Stage,
+      name: String): DataFrame =
+    stage.parquet(name, Tables.events(s, dir)
       .select(col("event_id").as("seq"), col("ts"),
         col("user_id"), col("event_type"), col("value"))
-      .repartitionByRange(segments, col("seq"))
-      .write.mode("overwrite").parquet(walDir)
+      .repartitionByRange(8, col("seq")))
 
   /** Per-segment manifest: (file, min_ts, max_ts, n_rows) from one
     * pass grouped on input_file_name — the removability metadata. */
@@ -172,9 +172,9 @@ object WalRetention {
     * latest-state from the RAW events table: the gate proves
     * truncation lost nothing the materialized view needs. */
   def walRetentionState(s: SparkSession, dir: String): DataFrame = {
-    val stage = StreamingOps.stagingRoot("q212", dir)
-    val walDir = s"$stage/wal"; val snapRoot = s"$stage/snap"
-    stageWal(s, dir, walDir)
+    val stage = Stage("q212", dir)
+    stageWal(s, dir, stage, "segments")
+    val walDir = stage.path("segments"); val snapRoot = stage.path("snap")
     compact(s, walDir, snapRoot, Incremental.DefaultCutoffMicros)
     stateAsOf(s, walDir, snapRoot)
       .select(col("user_id"), col("seq").as("event_id"), col("event_type"),
@@ -253,17 +253,17 @@ object WalRetention {
     * latest-wins over the below-boundary rows. */
   def ackRetentionReport(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val stage = StreamingOps.stagingRoot("q297", dir)
-    val walDir = s"$stage/wal"; val snapRoot = s"$stage/snap"
-    stageWal(s, dir, walDir)
-    val reg = new graft.streaming.SubscriptionRegistry(s"$stage/registry.json")
+    val stage = Stage("q297", dir)
+    val staged = stageWal(s, dir, stage, "segments")
+    val walDir = stage.path("segments"); val snapRoot = stage.path("snap")
+    val reg = new graft.streaming.SubscriptionRegistry(
+      stage.path("registry.json"))
     val names = Seq("sink_a", "sink_b", "sink_c")
     names.foreach(n => reg.add(graft.streaming.Subscription(n)))
     // pre-compaction rows pinned in memory: the report prices each
     // consumer's replay window against the WAL as acked, while the
     // files themselves get truncated underneath
-    val wal = s.read.parquet(walDir).select(col("seq"), col("ts"))
-      .localCheckpoint()
+    val wal = staged.select(col("seq"), col("ts")).localCheckpoint()
     val bounds = wal.agg(min(col("seq")), max(col("seq"))).head()
     val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
     names.foreach { n =>

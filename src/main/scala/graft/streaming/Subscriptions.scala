@@ -17,34 +17,28 @@ final case class Subscription(
     family: Option[String] = None,
     qualifier: Option[String] = None) {
 
+  /** The subscribed family/qualifier match on one cell; None when the
+    * subscription takes every cell. */
+  private val cellMatch: Option[Column => Column] =
+    if (family.isEmpty && qualifier.isEmpty) None
+    else Some(c =>
+      family.map(c.getField("family") === _).getOrElse(lit(true)) &&
+        qualifier.map(c.getField("qualifier") === _).getOrElse(lit(true)))
+
   /** Predicate over the WAL schema (seq, ts, table, rowkey, cells). */
-  def predicate: Column = {
-    val tableOk = table.map(col("table") === _).getOrElse(lit(true))
-    val cellOk = (family, qualifier) match {
-      case (None, None) => lit(true)
-      case _ =>
-        val f = (c: Column) =>
-          family.map(c.getField("family") === _).getOrElse(lit(true)) &&
-            qualifier.map(c.getField("qualifier") === _).getOrElse(lit(true))
-        exists(col("cells"), f)
-    }
-    tableOk && cellOk
-  }
+  def predicate: Column =
+    table.map(col("table") === _).getOrElse(lit(true)) &&
+      cellMatch.map(exists(col("cells"), _)).getOrElse(lit(true))
+
+  /** `cells` narrowed to the subscribed family/qualifier. */
+  def narrow(cells: Column): Column = cellMatch.fold(cells)(filter(cells, _))
 
   /** The subscription's view of the stream; cells are narrowed to the
     * subscribed family/qualifier (like SEP's per-subscription
     * KeyValue filtering). */
-  def apply(wal: DataFrame): DataFrame = {
-    val filtered = wal.filter(predicate)
-    (family, qualifier) match {
-      case (None, None) => filtered
-      case _ =>
-        val f = (c: Column) =>
-          family.map(c.getField("family") === _).getOrElse(lit(true)) &&
-            qualifier.map(c.getField("qualifier") === _).getOrElse(lit(true))
-        filtered.withColumn("cells", filter(col("cells"), f))
-    }
-  }
+  def apply(wal: DataFrame): DataFrame =
+    if (cellMatch.isEmpty) wal.filter(predicate)
+    else wal.filter(predicate).withColumn("cells", narrow(col("cells")))
 }
 
 object Subscriptions {

@@ -102,7 +102,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.FileSourceScanExec
     // stage the salted layout once, then pin the read half's scan
     Bucketing.rowkeyScan(spark, sfDir).collect() // stages
-    val stagePath = StreamingOps.stagingPath("q273", sfDir)
+    val stagePath = Stage.path("q273", sfDir)
     val df = Bucketing.rowkeyScanStaged(
       spark, s"$stagePath/events_s", userId = 7L, salts = 16)
     val scan = df.queryExecution.executedPlan.collectLeaves().collectFirst {

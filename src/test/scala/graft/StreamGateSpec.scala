@@ -113,4 +113,26 @@ class StreamGateSpec extends SparkSpec {
     val unbounded = using("awaitTermination()")
     assert(unbounded.isEmpty, s"an unbounded wait in $unbounded")
   }
+
+  test("staged files are laid out only by Stage; no source holds a NUL byte") {
+    val walk = Files.walk(Paths.get("src"))
+    val files = try walk.iterator().asScala.filter(Files.isRegularFile(_)).toList
+    finally walk.close()
+    val withNul = files.filter(f => Files.readAllBytes(f).contains(0.toByte))
+    assert(withNul.isEmpty, s"NUL bytes in $withNul")
+    val operators = files.filter(f => f.toString.contains("/operators/") &&
+      f.toString.endsWith(".scala") && f.getFileName.toString != "Stage.scala")
+    // an interpolated or concatenated `…/wal`, `…/ckpt`, `…/out` path
+    val layout = "(\\}|\\$\\w+|\\+ \")/(wal|ckpt|out)\\b".r
+    for (f <- operators) {
+      val text = Files.readString(f)
+      assert(!text.contains("writeWalJson"), s"$f stages a WAL itself")
+      assert(layout.findFirstIn(text).isEmpty,
+        s"$f builds a gate path: ${layout.findFirstIn(text)}")
+    }
+    val main = files.filter(_.toString.startsWith("src/main"))
+    for (gone <- Seq("stagingRoot", "stagingPath", "dirKey"))
+      assert(main.forall(f => !Files.readString(f).contains(gone)),
+        s"$gone is back")
+  }
 }
