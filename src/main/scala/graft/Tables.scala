@@ -65,8 +65,10 @@ object Tables {
   }
 
   /** Sorted (path, size, mtime) of every file at or below `p`; empty
-    * when `p` does not exist. Reads only sizes and mtimes: on the
-    * local file system asking a status for its permission forks `ls`. */
+    * when `p` does not exist. Reads only sizes and mtimes: without
+    * libhadoop, a local status loads its permission, owner and group
+    * through an `ls -ld` process on first use, and
+    * `graft.fs.NioRawLocalFileSystem` leaves that load to Hadoop. */
   private def fingerprint(fs: FileSystem, p: Path): Seq[(String, Long, Long)] = {
     def walk(st: FileStatus): Seq[(String, Long, Long)] =
       if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk)

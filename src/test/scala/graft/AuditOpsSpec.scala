@@ -3,7 +3,6 @@ package graft
 import graft.operators.{Dedup, Events, Similarity, StreamingOps, TextAnalysis}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Edge-case specs for the round-6 audit operators: q192 WAL
   * sequence integrity, q193 rate-series ACF + baseline chooser,
@@ -18,7 +17,7 @@ class AuditOpsSpec extends SparkSpec {
     * the [[Tables.events]] legacy LongType branch reads. */
   private def eventsDir(rows: Seq[(Long, Long)]): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_audit").toString
+    val dir = scratchDir("graft_audit").toString
     rows.toDF("event_id", "ts").write.parquet(s"$dir/events.parquet")
     dir
   }
@@ -95,7 +94,7 @@ class AuditOpsSpec extends SparkSpec {
   test("q134: grid clamp keeps the most recent maxGridRows points and flags them") {
     import spark.implicits._
     val hourUs = 3600000000L
-    val dir = Files.createTempDirectory("graft_audit").toString
+    val dir = scratchDir("graft_audit").toString
     // user 1 spans 10 grid hours (events at hour 0 and hour 9);
     // user 2 spans 2 (no clamp at maxGridRows = 5)
     Seq((1L, 1L, 0L * hourUs, 10.0), (2L, 1L, 9L * hourUs, 99.0),
@@ -122,7 +121,7 @@ class AuditOpsSpec extends SparkSpec {
   /** Writes (doc_id, text) rows as `$dir/documents.parquet`. */
   private def docsDir(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_audit").toString
+    val dir = scratchDir("graft_audit").toString
     rows.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
     dir
   }
@@ -222,7 +221,7 @@ class AuditOpsSpec extends SparkSpec {
   test("q199: EMD is 0 for a global-matching class and flags the skewed one") {
     import graft.operators.Privacy
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_audit").toString
+    val dir = scratchDir("graft_audit").toString
     // class (A,1): 100% band 0; class (B,3): the exact global mix —
     // EMD must be 0.5 and 0.0 respectively (m=2 bands, 150 rows)
     val rows =
@@ -355,7 +354,7 @@ class AuditOpsSpec extends SparkSpec {
   test("q205: a deliberately dirty load names exactly the broken rules") {
     import graft.operators.Relational
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_audit").toString
+    val dir = scratchDir("graft_audit").toString
     // violations: one null key, one qty=99, one discount=0.5, one
     // duplicated (orderkey, linenumber); orders: one bad status
     Seq(
@@ -424,7 +423,7 @@ class AuditOpsSpec extends SparkSpec {
   test("q209: conversion needs a purchase AT/AFTER the first view, per cohort") {
     import spark.implicits._
     val wk = 604800000000L
-    val dir = Files.createTempDirectory("graft_audit").toString
+    val dir = scratchDir("graft_audit").toString
     // week 0: u1 view->purchase (converts), u2 purchase->view with no
     // later purchase (must NOT convert); week 1: u3 view-only,
     // u4 purchase-only (not even a viewer)
@@ -451,7 +450,7 @@ class AuditOpsSpec extends SparkSpec {
   test("q210: seeded PII is detected per pattern; clean docs stay unflagged") {
     import graft.operators.Privacy
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_audit").toString
+    val dir = scratchDir("graft_audit").toString
     Seq(
       (1L, "web", "contact me at jane.doe@example.com for details"),
       (2L, "web", "call 555-123-4567 or 555 987 6543 today"),

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class ConsumerAckSpec extends SparkSpec {
 
   test("register -> consume k batches -> lag report reflects real acks") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ack").toString
+    val tmp = scratchDir("graft-ack").toString
     val reg = new SubscriptionRegistry(s"$tmp/registry.json")
     val clicks =
       Subscription("clicks", family = Some("e"), qualifier = Some("click"))
@@ -47,7 +47,7 @@ class ConsumerAckSpec extends SparkSpec {
   }
 
   test("ack is monotonic under out-of-order and duplicate acks") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ack2").toString
+    val tmp = scratchDir("graft-ack2").toString
     val reg = new SubscriptionRegistry(s"$tmp/r.json")
     reg.ack("c", 10L); reg.ack("c", 5L); reg.ack("c", 10L); reg.ack("c", 12L)
     assert(reg.ackedSeq("c") === Some(12L))
@@ -64,7 +64,7 @@ class ConsumerAckSpec extends SparkSpec {
     // layout, one file per sub, not the JVM lock) acking different
     // subscriptions write different files and merge instead of
     // last-writer-winning the whole map
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ack3").toString
+    val tmp = scratchDir("graft-ack3").toString
     val a = new SubscriptionRegistry(s"$tmp/r.json")
     val b = new SubscriptionRegistry(s"$tmp/r.json")
     // interleaved ack sequences from the two writers
@@ -80,7 +80,7 @@ class ConsumerAckSpec extends SparkSpec {
   }
 
   test("legacy combined acks file max-merges with per-sub files") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ack4").toString
+    val tmp = scratchDir("graft-ack4").toString
     // simulate a round-9 registry: one combined `.acks` file
     val legacy = Seq(
       """{"name":"old","seq":42}""",

@@ -3,7 +3,6 @@ package graft
 import graft.operators.{Dedup, Pipeline, Relational, Sampling, Similarity, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Semantics specs for the round-8 corpus operators (q213–q220):
   * synthetic tables whose expected outputs are hand-computable, at
@@ -17,7 +16,7 @@ class CorpusOpsSpec extends SparkSpec {
   /** Writes (doc_id, text, lang, source) rows as documents.parquet. */
   private def docsDir(rows: Seq[(Long, String, String, String)]): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_corpus").toString
+    val dir = scratchDir("graft_corpus").toString
     rows.map { case (id, t, l, s) => (id, t, l, s, t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
@@ -196,7 +195,7 @@ class CorpusOpsSpec extends SparkSpec {
     // 16 far-apart corpus vectors (ids 5..20) => the 16 hash-ranked
     // seeds ARE the corpus, every vector snaps to itself, ADC equals
     // the exact distance, and PQ top-k == exact top-k for k=10.
-    val dir = Files.createTempDirectory("graft_pq").toString
+    val dir = scratchDir("graft_pq").toString
     def vec(hot: Int, mag: Float): Seq[Float] =
       (0 until 64).map(i => if (i == hot) mag else 0.0f)
     val rows =
@@ -240,7 +239,7 @@ class CorpusOpsSpec extends SparkSpec {
     import graft.operators.Events
     val us = 1000L // store nanos; Tables.events re-types to micros
     val day = 86400000000L
-    val dir = Files.createTempDirectory("graft_bounce").toString
+    val dir = scratchDir("graft_bounce").toString
     // u1: one 2-event session early day 0; one 2-event session
     // straddling midnight (gap 15 min < 30 min) starting day 0;
     // u2: a single-event bounce on day 1
@@ -275,7 +274,7 @@ class CorpusOpsSpec extends SparkSpec {
   /** Full-schema synthetic events table. */
   private def eventsDir(rows: Seq[(Long, Long, Long, String, Double)]): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_ev").toString
+    val dir = scratchDir("graft_ev").toString
     rows.map { case (id, u, tsUs, et, v) => (id, u, tsUs * 1000L, et, v) }
       .toDF("event_id", "user_id", "ts", "event_type", "value")
       .write.parquet(s"$dir/events.parquet")
@@ -343,7 +342,7 @@ class CorpusOpsSpec extends SparkSpec {
 
   test("q238: a constant dimension calibrates to zero error; bounds hold") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_sq8").toString
+    val dir = scratchDir("graft_sq8").toString
     // dim 0 constant 0.5; dim 1 spans [-0.5, 0.5]
     val rows: Seq[(Long, Seq[Float], Int)] = (0L to 9L).map { i =>
       (i, (0 until 64).map(j => if (j == 0) 0.5f
@@ -397,7 +396,7 @@ class CorpusOpsSpec extends SparkSpec {
   test("q234/q235: books balance, mismatches and impossible latencies surface") {
     import spark.implicits._
     import graft.operators.Relational
-    val dir = Files.createTempDirectory("graft_whse").toString
+    val dir = scratchDir("graft_whse").toString
     val d0 = java.sql.Timestamp.valueOf("2020-01-01 00:00:00")
     def ts(s: String) = java.sql.Timestamp.valueOf(s + " 00:00:00")
     // order 1 (status O): one line, charge == header => clean
@@ -432,7 +431,7 @@ class CorpusOpsSpec extends SparkSpec {
   test("q236: exact integer billed-vs-retail ratio per brand") {
     import spark.implicits._
     import graft.operators.Relational
-    val dir = Files.createTempDirectory("graft_price").toString
+    val dir = scratchDir("graft_price").toString
     val d = java.sql.Timestamp.valueOf("2020-01-01 00:00:00")
     // brand A: billed exactly retail*qty (ratio 1e6, in band);
     // brand B: billed at half retail (ratio 5e5, out of band)
@@ -488,7 +487,7 @@ class CorpusOpsSpec extends SparkSpec {
   // ---------------------------------------------------------- q233
   test("q233: a single far vector among tight inliers is the one outlier") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_outl").toString
+    val dir = scratchDir("graft_outl").toString
     def axis(i: Int, mag: Float): Seq[Float] =
       (0 until 64).map(j => if (j == i) mag else 0.0f)
     // label 0: 19 identical inliers + 1 far vector (n = 20 so the
@@ -511,7 +510,7 @@ class CorpusOpsSpec extends SparkSpec {
   // ---------------------------------------------------------- q224
   test("q224: MMR demotes an exact duplicate below a diverse hit") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_mmr").toString
+    val dir = scratchDir("graft_mmr").toString
     def axis(i: Int, mag: Float): Seq[Float] =
       (0 until 64).map(j => if (j == i) mag else 0.0f)
     val queryVec = (0 until 64).map(j =>

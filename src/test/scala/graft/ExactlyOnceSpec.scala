@@ -4,12 +4,11 @@ import graft.sources.WalSource
 import graft.streaming.{ExactlyOnce, Subscription}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-import java.nio.file.Files
 
 class ExactlyOnceSpec extends SparkSpec {
 
   test("replayed WAL mutations are deduplicated by seq within watermark") {
-    val walDir = Files.createTempDirectory("graft_dup").toString
+    val walDir = scratchDir("graft_dup").toString
     val wal = WalSource.eventsAsWal(spark, sfDir)
     // simulate at-least-once delivery: every mutation shipped twice
     WalSource.writeWalJson(wal.union(wal), walDir, batches = 4)
@@ -29,7 +28,7 @@ class ExactlyOnceSpec extends SparkSpec {
   }
 
   test("fan-out: two subscriptions consume the same WAL concurrently") {
-    val walDir = Files.createTempDirectory("graft_fan").toString
+    val walDir = scratchDir("graft_fan").toString
     val wal = WalSource.eventsAsWal(spark, sfDir)
     WalSource.writeWalJson(wal, walDir, batches = 3)
     val expected = wal.count()
@@ -76,7 +75,7 @@ class ExactlyOnceSpec extends SparkSpec {
 
   test("subscription registry: register/unregister persists across instances") {
     import graft.streaming.SubscriptionRegistry
-    val path = Files.createTempDirectory("graft_reg").resolve("subs.jsonl").toString
+    val path = scratchDir("graft_reg").resolve("subs.jsonl").toString
     val reg = new SubscriptionRegistry(path)
     assert(reg.list().isEmpty)
     reg.add(Subscription("all"))

@@ -109,7 +109,7 @@ class FusedConsumerSpec extends SparkSpec {
   }
 
   test("the fused consumer resumes from its checkpoint with its seen seqs") {
-    val root = Files.createTempDirectory("graft_fused_restart")
+    val root = scratchDir("graft_fused_restart")
     val walDir = root.resolve("wal"); Files.createDirectories(walDir)
     val ckpt = root.resolve("ckpt").toString
     import spark.implicits._

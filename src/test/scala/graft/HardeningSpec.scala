@@ -44,7 +44,7 @@ class HardeningSpec extends SparkSpec {
   }
 
   test("SubscriptionRegistry: concurrent adds lose no updates") {
-    val path = Files.createTempDirectory("graft_reg").resolve("subs.json").toString
+    val path = scratchDir("graft_reg").resolve("subs.json").toString
     val reg = new SubscriptionRegistry(path)
     val threads = (0 until 8).map { i =>
       new Thread(() => (0 until 5).foreach { j =>
@@ -60,7 +60,7 @@ class HardeningSpec extends SparkSpec {
     // 'wal:v2' is a java.io.File path, not a remote scheme — the
     // scheme guard must only fire on explicit scheme:// URIs
     val dir = Files.createDirectories(
-      Files.createTempDirectory("graft_colon").resolve("wal:v2"))
+      scratchDir("graft_colon").resolve("wal:v2"))
     // hand-written segment (Hadoop writers reject colons in paths;
     // the DSv2 reader goes through java.io and must not)
     val lines = WalSource.eventsAsWal(spark, sfDir).limit(25)
@@ -82,7 +82,7 @@ class HardeningSpec extends SparkSpec {
         .writeStream.format("memory")
         .queryName(s"walfail${math.abs(dir.hashCode)}")
         .option("checkpointLocation",
-          Files.createTempDirectory("graft_ck").toString)
+          scratchDir("graft_ck").toString)
         .trigger(Trigger.AvailableNow()).start()
       try q.awaitTermination(60000) finally q.stop()
     }
@@ -92,7 +92,7 @@ class HardeningSpec extends SparkSpec {
     assert(e1.getMessage.contains("graft-wal") ||
       Option(e1.getCause).exists(_.getMessage.contains("graft-wal")))
     val e2 = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      run(Files.createTempDirectory("graft_gone").toString + "/nope")
+      run(scratchDir("graft_gone").toString + "/nope")
     }
     assert(e2.getMessage.contains("does not exist") ||
       Option(e2.getCause).exists(_.getMessage.contains("does not exist")))

@@ -28,7 +28,7 @@ class PersistedIndexSpec extends SparkSpec {
   test("probeBaseIndex reads the index + delta only — the base documents are never rescanned") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val idx = java.nio.file.Files.createTempDirectory("graft-idxspec").toString
+    val idx = scratchDir("graft-idxspec").toString
     Dedup.writeBaseIndex(docs.filter(col("doc_id") % 2 === 0), idx)
 
     val probe = Dedup.probeBaseIndex(spark, idx,
@@ -52,7 +52,7 @@ class PersistedIndexSpec extends SparkSpec {
   test("q181 probeComponentIndex reads the index + delta only — base docs never rescanned") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val stage = java.nio.file.Files.createTempDirectory("graft-ccspec").toString
+    val stage = scratchDir("graft-ccspec").toString
     Dedup.writeComponentIndex(spark, docs.filter(col("doc_id") % 4 =!= 3), stage)
 
     val probe = Dedup.probeComponentIndex(spark, stage,

@@ -25,7 +25,7 @@ class QuotaSpec extends SparkSpec {
 
   private def appendSegment(walDir: String, rows: Seq[(Long, Long, Long)],
       name: String): Unit = {
-    val tmp = Files.createTempDirectory("graft_qwave").toString
+    val tmp = scratchDir("graft_qwave").toString
     mutations(rows).coalesce(1).toJSON.write.mode("overwrite").text(tmp)
     val part = Files.list(Paths.get(tmp)).filter(p =>
       p.getFileName.toString.startsWith("part-")).findFirst().get()
@@ -56,7 +56,7 @@ class QuotaSpec extends SparkSpec {
   }
 
   test("a late low seq evicts a higher admitted seq across micro-batches") {
-    val stage = Files.createTempDirectory("graft_q221a").toString
+    val stage = scratchDir("graft_q221a").toString
     val walDir = s"$stage/wal"; Files.createDirectories(Paths.get(walDir))
     // one key (user 1, hour 0), limit 2. Batch 1 delivers seqs 10, 11
     // (both admitted); batch 2 delivers seq 5 — it must ENTER the
@@ -70,7 +70,7 @@ class QuotaSpec extends SparkSpec {
   }
 
   test("checkpoint restart resumes per-key quota state") {
-    val stage = Files.createTempDirectory("graft_q221b").toString
+    val stage = scratchDir("graft_q221b").toString
     val walDir = s"$stage/wal"; Files.createDirectories(Paths.get(walDir))
     val ckpt = s"$stage/ckpt"; val out = s"$stage/out"
     // run 1: key (1, hour 0) uses up its quota of 2 (seqs 1, 2)

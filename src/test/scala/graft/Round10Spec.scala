@@ -99,8 +99,7 @@ class Round10Spec extends SparkSpec {
         array(struct(lit("e").as("family"),
           col("event_type").as("qualifier"), col("value"), col("ts"),
           col("kind"))).as("cells"))
-    val stage = java.nio.file.Files
-      .createTempDirectory("graft-q299-spec").toString
+    val stage = scratchDir("graft-q299-spec").toString
     val view = StreamingOps.streamIvmRetractOf(spark, stage, muts)
       .collect()
       .map(r => (r.getAs[Long]("user_id"), r.getAs[String]("event_type")) ->

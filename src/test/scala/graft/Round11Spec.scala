@@ -18,7 +18,7 @@ class Round11Spec extends SparkSpec {
   // query's checkpoint replay produces.
 
   test("q326: batch replay + mid-stream compaction leave verdicts and pairs exact") {
-    val stage = java.nio.file.Files.createTempDirectory("spec_q326_replay").toString
+    val stage = scratchDir("spec_q326_replay").toString
     val stateRoot = s"$stage/state"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stateRoot))
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
@@ -52,7 +52,7 @@ class Round11Spec extends SparkSpec {
   }
 
   test("q326: restart mid-stream — a second AvailableNow run over the same checkpoint absorbs the remaining files") {
-    val stage = java.nio.file.Files.createTempDirectory("spec_q326_restart").toString
+    val stage = scratchDir("spec_q326_restart").toString
     val stateRoot = s"$stage/state"
     val inDir = s"$stage/in"; val ckpt = s"$stage/ckpt"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stateRoot))

@@ -61,8 +61,7 @@ class Round13Spec extends SparkSpec {
   }
 
   test("q385: batch replay + mid-stream compaction leave postings exact") {
-    val stage = java.nio.file.Files
-      .createTempDirectory("spec_q385_replay").toString
+    val stage = scratchDir("spec_q385_replay").toString
     val stateRoot = s"$stage/state"
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(stateRoot))
@@ -93,8 +92,7 @@ class Round13Spec extends SparkSpec {
   }
 
   test("q385: restart mid-stream — second AvailableNow run on the same checkpoint") {
-    val stage = java.nio.file.Files
-      .createTempDirectory("spec_q385_restart").toString
+    val stage = scratchDir("spec_q385_restart").toString
     val stateRoot = s"$stage/state"
     val inDir = s"$stage/in"; val ckpt = s"$stage/ckpt"
     java.nio.file.Files.createDirectories(
@@ -188,8 +186,7 @@ class Round13Spec extends SparkSpec {
 
   private def stageWalSegments(df: org.apache.spark.sql.DataFrame,
       walDir: String, parts: Int, startIdx: Int): Unit = {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("spec_q13_walstage").toString
+    val tmp = scratchDir("spec_q13_walstage").toString
     df.repartitionByRange(parts, col("seq")).toJSON
       .write.mode("overwrite").text(tmp)
     val files = new java.io.File(tmp).listFiles()
@@ -203,8 +200,7 @@ class Round13Spec extends SparkSpec {
   }
 
   test("q364: restart mid-stream — streamed PSI histogram equals batch") {
-    val stage = java.nio.file.Files
-      .createTempDirectory("spec_q364_restart").toString
+    val stage = scratchDir("spec_q364_restart").toString
     val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"
     val out = s"$stage/out"
     val nb = 12
@@ -243,8 +239,7 @@ class Round13Spec extends SparkSpec {
 
   test("q369: restart mid-stream — MG state keeps its theorems and exact n") {
     import graft.functions.{MgSketch, MisraGriesAgg}
-    val stage = java.nio.file.Files
-      .createTempDirectory("spec_q369_restart").toString
+    val stage = scratchDir("spec_q369_restart").toString
     val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"
     val out = s"$stage/out"
     val k = 32
@@ -357,8 +352,7 @@ class Round13Spec extends SparkSpec {
   }
 
   test("q401: restart mid-stream — streamed NB confusion equals batch q388") {
-    val stage = java.nio.file.Files
-      .createTempDirectory("spec_q401_restart").toString
+    val stage = scratchDir("spec_q401_restart").toString
     val stateRoot = s"$stage/state"
     val inDir = s"$stage/in"; val ckpt = s"$stage/ckpt"
     java.nio.file.Files.createDirectories(

@@ -40,8 +40,7 @@ class Round14Spec extends SparkSpec {
 
   test("q385: compaction rewrites only touched cells; untouched partitions are hard links") {
     import spark.implicits._
-    val stage = java.nio.file.Files
-      .createTempDirectory("spec_q385_scoped").toString
+    val stage = scratchDir("spec_q385_scoped").toString
     val stateRoot = s"$stage/state"
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(stateRoot))
@@ -350,8 +349,7 @@ class Round14Spec extends SparkSpec {
 
   test("q412: batch replay + mid-stream compaction leave the ownership frame exact") {
     val k = 5
-    val stage = java.nio.file.Files
-      .createTempDirectory("spec_q412_replay").toString
+    val stage = scratchDir("spec_q412_replay").toString
     val stateRoot = s"$stage/state"
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(stateRoot))
@@ -380,8 +378,7 @@ class Round14Spec extends SparkSpec {
 
   test("q412: restart mid-stream — second AvailableNow run on the same checkpoint") {
     val k = 5
-    val stage = java.nio.file.Files
-      .createTempDirectory("spec_q412_restart").toString
+    val stage = scratchDir("spec_q412_restart").toString
     val stateRoot = s"$stage/state"
     val inDir = s"$stage/in"; val ckpt = s"$stage/ckpt"
     java.nio.file.Files.createDirectories(
@@ -668,8 +665,7 @@ class Round14Spec extends SparkSpec {
   test("q435: restart mid-stream — second AvailableNow run on the same checkpoint") {
     import scala.jdk.CollectionConverters._
     val M = graft.operators.Multimodal
-    val stage = java.nio.file.Files
-      .createTempDirectory("spec_q435_restart").toString
+    val stage = scratchDir("spec_q435_restart").toString
     val inDir = s"$stage/in"; val ckpt = s"$stage/ckpt"
     val store = s"$stage/store"
     java.nio.file.Files.createDirectories(

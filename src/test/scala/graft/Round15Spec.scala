@@ -64,8 +64,7 @@ class Round15Spec extends SparkSpec {
 
   test("q412: LSM rolls follow the binomial tier shape and never touch the bulk base") {
     val k = 5
-    val stage = java.nio.file.Files
-      .createTempDirectory("spec_q412_lsm").toString
+    val stage = scratchDir("spec_q412_lsm").toString
     val stateRoot = s"$stage/state"
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(stateRoot))
@@ -135,8 +134,7 @@ class Round15Spec extends SparkSpec {
   }
 
   test("q443: restart mid-stream — second AvailableNow run on the same checkpoint") {
-    val stage = java.nio.file.Files
-      .createTempDirectory("spec_q443_restart").toString
+    val stage = scratchDir("spec_q443_restart").toString
     val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"
     val out = s"$stage/out"
     val wal = graft.sources.WalSource.eventsAsWal(spark, sfDir)
@@ -203,8 +201,7 @@ class Round15Spec extends SparkSpec {
 
   test("q385: every cell partition is exactly one parquet file") {
     import spark.implicits._
-    val stage = java.nio.file.Files
-      .createTempDirectory("spec_q385_files").toString
+    val stage = scratchDir("spec_q385_files").toString
     val stateRoot = s"$stage/state"
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(stateRoot))
@@ -299,8 +296,7 @@ class Round15Spec extends SparkSpec {
   }
 
   test("q452: restart mid-stream — second AvailableNow run on the same checkpoint") {
-    val stage = java.nio.file.Files
-      .createTempDirectory("spec_q452_restart").toString
+    val stage = scratchDir("spec_q452_restart").toString
     val walDir = s"$stage/wal"; val ckpt = s"$stage/ckpt"
     val out = s"$stage/out"
     val wal = graft.sources.WalSource.eventsAsWal(spark, sfDir)

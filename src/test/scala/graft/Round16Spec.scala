@@ -163,8 +163,7 @@ class Round16Spec extends SparkSpec {
 
   test("store versioning resumes past orphaned version dirs") {
     import graft.operators.StreamingOps.{publishStore, storeBaseDir, storePointer}
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-r16-store").toString
+    val root = scratchDir("graft-r16-store").toString
     def pub(n: Int): Unit =
       publishStore(spark, root, "st", Seq((n, "x")).toDF("k", "v"), Seq())
     pub(0); pub(1)

@@ -83,8 +83,7 @@ class Round17Spec extends SparkSpec {
 
   test("q480: batch replay is idempotent and final equals full recompute") {
     import graft.operators.{Dedup, Relational, StreamingOps}
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-r17-pr").toString
+    val root = scratchDir("graft-r17-pr").toString
     val edges = Seq(
       (1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
       (5L, 6L), (6L, 4L), (2L, 5L), (1L, 6L), (2L, 6L)
@@ -109,8 +108,7 @@ class Round17Spec extends SparkSpec {
 
   test("q480: state store holds edges and every round frame consistently") {
     import graft.operators.StreamingOps
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-r17-pr2").toString
+    val root = scratchDir("graft-r17-pr2").toString
     val edges = Seq((1L, 2L), (2L, 3L)).toDF("pa", "pb")
     StreamingOps.initIncrementalPageRank(spark, root, edges, 2)
     val st = spark.read.parquet(

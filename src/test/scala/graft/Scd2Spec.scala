@@ -23,7 +23,7 @@ class Scd2Spec extends SparkSpec {
 
   private def appendSegment(walDir: String,
       rows: Seq[(Long, Long, Long, String, Double)], name: String): Unit = {
-    val tmp = Files.createTempDirectory("graft_swave").toString
+    val tmp = scratchDir("graft_swave").toString
     mutations(rows).coalesce(1).toJSON.write.mode("overwrite").text(tmp)
     val part = Files.list(Paths.get(tmp)).filter(p =>
       p.getFileName.toString.startsWith("part-")).findFirst().get()
@@ -37,7 +37,7 @@ class Scd2Spec extends SparkSpec {
       .toMap
 
   test("a version opened in one batch closes in a later batch, exactly once") {
-    val stage = Files.createTempDirectory("graft_q230a").toString
+    val stage = scratchDir("graft_q230a").toString
     val walDir = s"$stage/wal"; Files.createDirectories(Paths.get(walDir))
     appendSegment(walDir, Seq((1L, 1L, 100L, "view", 1.0)), "seg_a.txt")
     appendSegment(walDir, Seq((2L, 1L, 200L, "purchase", 2.0)), "seg_b.txt")
@@ -53,7 +53,7 @@ class Scd2Spec extends SparkSpec {
   }
 
   test("a below-high-water arrival is late-routed, never spliced") {
-    val stage = Files.createTempDirectory("graft_q230b").toString
+    val stage = scratchDir("graft_q230b").toString
     val walDir = s"$stage/wal"; Files.createDirectories(Paths.get(walDir))
     appendSegment(walDir, Seq((1L, 1L, 100L, "view", 1.0),
       (2L, 1L, 300L, "purchase", 2.0)), "seg_a.txt")
@@ -72,7 +72,7 @@ class Scd2Spec extends SparkSpec {
   }
 
   test("checkpoint restart resumes the open version") {
-    val stage = Files.createTempDirectory("graft_q230c").toString
+    val stage = scratchDir("graft_q230c").toString
     val walDir = s"$stage/wal"; Files.createDirectories(Paths.get(walDir))
     val ckpt = s"$stage/ckpt"; val out = s"$stage/out"
     appendSegment(walDir, Seq((1L, 1L, 100L, "view", 1.0)), "seg_a.txt")

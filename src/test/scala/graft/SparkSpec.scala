@@ -1,5 +1,7 @@
 package graft
 
+import graft.operators.Stage
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -19,6 +21,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** A fresh directory named `prefix…` for a test's files, under
+    * [[SparkSpec.scratchRoot]]: specs create no directory elsewhere. */
+  def scratchDir(prefix: String): Path =
+    Files.createTempDirectory(SparkSpec.scratchRoot, prefix)
 }
 
 object SparkSpec {
@@ -29,4 +36,9 @@ object SparkSpec {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** This JVM's one directory for spec files, inside the run directory
+    * [[Stage.runRoot]], which is deleted at exit: a test run leaves
+    * nothing behind in the tmpdir. */
+  lazy val scratchRoot: Path = Files.createDirectories(Stage.runRoot.resolve("specs"))
 }

@@ -32,7 +32,7 @@ class StreamActiveUsersSpec extends SparkSpec {
     * file list). */
   private def appendSegment(walDir: String, rows: Seq[(Long, Long, Long)],
       name: String): Unit = {
-    val tmp = Files.createTempDirectory("graft_wave").toString
+    val tmp = scratchDir("graft_wave").toString
     mutations(rows).coalesce(1).toJSON.write.mode("overwrite").text(tmp)
     val part = Files.list(Paths.get(tmp)).filter(p =>
       p.getFileName.toString.startsWith("part-")).findFirst().get()
@@ -43,7 +43,7 @@ class StreamActiveUsersSpec extends SparkSpec {
     df.collect().map(r => r.getAs[Long]("day") -> r.getAs[Long]("dau")).toMap
 
   test("a pair delivered in two different micro-batches counts once") {
-    val stage = Files.createTempDirectory("graft_q208a").toString
+    val stage = scratchDir("graft_q208a").toString
     val walDir = s"$stage/wal"; Files.createDirectories(Paths.get(walDir))
     // segment 1: users 1,2 on day 0; segment 2 REDELIVERS (1, day 0)
     // and adds user 3 — with maxFilesPerTrigger = 1 each segment is
@@ -57,7 +57,7 @@ class StreamActiveUsersSpec extends SparkSpec {
   }
 
   test("kill/restart from checkpoint does not double-count through the dedup state") {
-    val stage = Files.createTempDirectory("graft_q208b").toString
+    val stage = scratchDir("graft_q208b").toString
     val walDir = s"$stage/wal"; Files.createDirectories(Paths.get(walDir))
     val ckpt = s"$stage/ckpt"; val out = s"$stage/out"
     // run 1: users 1,2 active on day 0; user 1 also on day 1

@@ -27,7 +27,7 @@ class StreamGateSpec extends SparkSpec {
 
   test("the read-back binds the stream's schema: no job, same rows as inference") {
     import spark.implicits._
-    val stage = Files.createTempDirectory("graft_gate_rb").toString
+    val stage = scratchDir("graft_gate_rb").toString
     val kv = (1L to 40L).map(i => (i % 5, i))
     val sums = stageInput(stage, kv, 3)
       .groupBy(col("k")).agg(sum(col("v")).as("total"), count(lit(1)).as("n"))
@@ -54,7 +54,7 @@ class StreamGateSpec extends SparkSpec {
   }
 
   test("a failing sink surfaces its error, stops the query, restores the session") {
-    val stage = Files.createTempDirectory("graft_gate_fail").toString
+    val stage = scratchDir("graft_gate_fail").toString
     val stream = stageInput(stage, Seq((1L, 1L), (2L, 2L)), 2)
     val before = spark.conf.get("spark.sql.shuffle.partitions")
     var seen = ""
@@ -73,7 +73,7 @@ class StreamGateSpec extends SparkSpec {
   }
 
   test("the bounded wait stops a query that never finishes") {
-    val ckpt = Files.createTempDirectory("graft_gate_slow").toString
+    val ckpt = scratchDir("graft_gate_slow").toString
     val q = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
       .writeStream.format("noop")
       .option("checkpointLocation", ckpt)
@@ -134,5 +134,16 @@ class StreamGateSpec extends SparkSpec {
     for (gone <- Seq("stagingRoot", "stagingPath", "dirKey"))
       assert(main.forall(f => !Files.readString(f).contains(gone)),
         s"$gone is back")
+  }
+
+  test("specs create scratch directories only through SparkSpec.scratchDir") {
+    val walk = Files.walk(Paths.get("src/test"))
+    val specs = try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "SparkSpec.scala")
+      .toList
+    finally walk.close()
+    val direct = """Files\s*\.\s*createTempDirectory""".r
+    val outside = specs.filter(f => direct.findFirstIn(Files.readString(f)).isDefined)
+    assert(outside.isEmpty, s"a tmpdir entry outside SparkSpec.scratchDir in $outside")
   }
 }

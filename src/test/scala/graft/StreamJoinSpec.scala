@@ -6,7 +6,6 @@ import graft.streaming.RowMaterializer
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-import java.nio.file.Files
 
 class StreamJoinSpec extends SparkSpec {
 
@@ -17,7 +16,7 @@ class StreamJoinSpec extends SparkSpec {
       .select(col("rowkey"), col("seq"), col("event_type"), col("event_time"))
 
   test("stream-stream interval join: purchases to clicks within 1h") {
-    val walDir = Files.createTempDirectory("graft_ssj").toString
+    val walDir = scratchDir("graft_ssj").toString
     val wal = WalSource.eventsAsWal(spark, sfDir)
     WalSource.writeWalJson(wal, walDir, batches = 4)
 

@@ -14,7 +14,7 @@ class StreamSinkSpec extends SparkSpec {
   }
 
   test("publishView: pointer swap is atomic and every crash window leaves a readable view") {
-    val root = Files.createTempDirectory("graft_view").toString
+    val root = scratchDir("graft_view").toString
     // no pointer before the first publish
     assert(StreamingOps.currentViewDir(root).isEmpty)
     StreamingOps.publishView(root, mkView(3), 1L)
@@ -60,7 +60,7 @@ class StreamSinkSpec extends SparkSpec {
     // the AuditOpsSpec scenario: gap, duplicate (same-range-segment,
     // so first-delivery = min-ts), reordering, empty shard — with
     // the extra columns eventsAsWal needs
-    val dir = Files.createTempDirectory("graft_sw").toString
+    val dir = scratchDir("graft_sw").toString
     Seq(
       (0L, 10L * us), (5L, 20L * us), (10L, 30L * us),
       (1L, 10L * us), (11L, 40L * us),

@@ -20,7 +20,7 @@ class TablesSpec extends SparkSpec {
   /** A fresh directory holding a copy of the sf0.001 events table,
     * whose `ts` is stored as timestamp[us]. */
   private def microsFixture(): String = {
-    val dir = Files.createTempDirectory("graft-tables-us")
+    val dir = scratchDir("graft-tables-us")
     Files.copy(java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       dir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
     dir.toString
@@ -53,7 +53,7 @@ class TablesSpec extends SparkSpec {
   }
 
   private def nanosFixture(): String = {
-    val dir = Files.createTempDirectory("graft-tables-ns")
+    val dir = scratchDir("graft-tables-ns")
     writeNanos(dir)
     dir.toString
   }
@@ -90,7 +90,7 @@ class TablesSpec extends SparkSpec {
 
   test("a rewritten table or a changed parquet setting is inferred again") {
     withConf(NanosAsLong -> "true") {
-      val dir = Files.createTempDirectory("graft-tables-rw")
+      val dir = scratchDir("graft-tables-rw")
       writeNanos(dir)
       Tables.load(spark, dir.toString, "events")
       writeNanos(dir, extra = true)
@@ -116,7 +116,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("a missing path or an empty directory raises Spark's error and is not memoized") {
-    val dir = Files.createTempDirectory("graft-tables-missing").toString
+    val dir = scratchDir("graft-tables-missing").toString
     def same(path: String, load: => Any): Unit = {
       val want = intercept[AnalysisException](spark.read.parquet(path))
       val got = intercept[AnalysisException](load)

@@ -10,7 +10,7 @@ import java.nio.file.Files
 class WalDataSourceSpec extends SparkSpec {
 
   test("DSv2 graft-wal source: AvailableNow replays the full WAL") {
-    val walDir = Files.createTempDirectory("graft_dsv2").toString
+    val walDir = scratchDir("graft_dsv2").toString
     val wal = WalSource.eventsAsWal(spark, sfDir)
     WalSource.writeWalJson(wal, walDir, batches = 5)
     val expected = wal.count()
@@ -30,9 +30,9 @@ class WalDataSourceSpec extends SparkSpec {
   }
 
   test("DSv2 source resumes from checkpoint: new segments only, no duplicates") {
-    val walDir = Files.createTempDirectory("graft_ckpt_wal").toString
-    val ckpt = Files.createTempDirectory("graft_ckpt").toString
-    val outDir = Files.createTempDirectory("graft_ckpt_out").toString
+    val walDir = scratchDir("graft_ckpt_wal").toString
+    val ckpt = scratchDir("graft_ckpt").toString
+    val outDir = scratchDir("graft_ckpt_out").toString
     val ev = WalSource.eventsAsWal(spark, sfDir)
     val firstHalf = ev.filter(col("seq") % 2 === 0)
     val secondHalf = ev.filter(col("seq") % 2 === 1)
@@ -51,7 +51,7 @@ class WalDataSourceSpec extends SparkSpec {
     assert(n1 == firstHalf.count())
 
     // append later segments with lexicographically larger names
-    val tmp = Files.createTempDirectory("graft_ckpt_tmp").toString
+    val tmp = scratchDir("graft_ckpt_tmp").toString
     WalSource.writeWalJson(secondHalf, tmp, batches = 2)
     new java.io.File(tmp).listFiles().filter(_.getName.startsWith("part-"))
       .foreach { f =>
@@ -65,7 +65,7 @@ class WalDataSourceSpec extends SparkSpec {
   }
 
   test("DSv2 source tails the WAL: segments written while running are consumed") {
-    val walDir = Files.createTempDirectory("graft_tail").toString
+    val walDir = scratchDir("graft_tail").toString
     val ev = WalSource.eventsAsWal(spark, sfDir)
     val first = ev.filter(col("seq") % 2 === 0)
     val second = ev.filter(col("seq") % 2 === 1)
@@ -80,7 +80,7 @@ class WalDataSourceSpec extends SparkSpec {
       query.processAllAvailable()
       assert(spark.table("tail_counts").collect().head.getAs[Long]("n") == first.count())
       // ship more WAL segments while the query is live
-      val tmp = Files.createTempDirectory("graft_tail_tmp").toString
+      val tmp = scratchDir("graft_tail_tmp").toString
       WalSource.writeWalJson(second, tmp, batches = 2)
       new java.io.File(tmp).listFiles().filter(_.getName.startsWith("part-"))
         .foreach { f =>
@@ -94,7 +94,7 @@ class WalDataSourceSpec extends SparkSpec {
 
   test("DSv2 source feeds the stateful row materializer end-to-end") {
     import spark.implicits._
-    val walDir = Files.createTempDirectory("graft_dsv2b").toString
+    val walDir = scratchDir("graft_dsv2b").toString
     val wal = WalSource.eventsAsWal(spark, sfDir)
     WalSource.writeWalJson(wal, walDir, batches = 3)
 

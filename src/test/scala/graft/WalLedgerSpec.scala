@@ -27,7 +27,7 @@ class WalLedgerSpec extends SparkSpec {
   }
 
   private def freshRoot(): String = {
-    val r = Files.createTempDirectory("graft_ledger").toString
+    val r = scratchDir("graft_ledger").toString
     r
   }
 

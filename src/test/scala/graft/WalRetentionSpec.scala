@@ -13,7 +13,7 @@ class WalRetentionSpec extends SparkSpec {
   /** (seq, tsUs, user, type, value) mutations → a 3-segment WAL. */
   private def stageWal(rows: Seq[(Long, Long, Long, String, Double)]): String = {
     import spark.implicits._
-    val walDir = Files.createTempDirectory("graft_walret").toString + "/wal"
+    val walDir = scratchDir("graft_walret").toString + "/wal"
     rows.toDF("seq", "ts", "user_id", "event_type", "value")
       .repartitionByRange(3, col("seq"))
       .write.mode("overwrite").parquet(walDir)
@@ -80,7 +80,7 @@ class WalRetentionSpec extends SparkSpec {
     val walDir = stageWal(muts)
     val snapRoot = walDir + "_snap"
     val reg = new SubscriptionRegistry(
-      Files.createTempDirectory("graft_walret_reg").toString + "/r.json")
+      scratchDir("graft_walret_reg").toString + "/r.json")
     reg.add(Subscription("fast")); reg.add(Subscription("slow"))
     val refEnd = stateMap(WalRetention.stateAsOf(spark, walDir, snapRoot))
 

@@ -4,12 +4,11 @@ import graft.sources.WalSource
 import graft.streaming.{Subscription, Subscriptions}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-import java.nio.file.Files
 
 class WalSourceSpec extends SparkSpec {
 
   test("events → WAL files → stream: counts match batch, payload extractable") {
-    val walDir = Files.createTempDirectory("graft_wal").toString
+    val walDir = scratchDir("graft_wal").toString
     val wal = WalSource.eventsAsWal(spark, sfDir)
     WalSource.writeWal(wal, walDir, batches = 4)
     val expected = wal.count()
@@ -48,7 +47,7 @@ class WalSourceSpec extends SparkSpec {
   }
 
   test("streaming session windows (native session_window) over the WAL") {
-    val walDir = Files.createTempDirectory("graft_sess").toString
+    val walDir = scratchDir("graft_sess").toString
     val wal = WalSource.eventsAsWal(spark, sfDir)
     WalSource.writeWal(wal, walDir, batches = 2)
     val sessions = WalSource.stream(spark, walDir, maxFilesPerTrigger = 1)
@@ -73,7 +72,7 @@ class WalSourceSpec extends SparkSpec {
   }
 
   test("streaming tumbling window with watermark over the WAL") {
-    val walDir = Files.createTempDirectory("graft_wal2").toString
+    val walDir = scratchDir("graft_wal2").toString
     val wal = WalSource.eventsAsWal(spark, sfDir)
     WalSource.writeWal(wal, walDir, batches = 2)
     val stream = WalSource.stream(spark, walDir, maxFilesPerTrigger = 1)

@@ -3,7 +3,6 @@ package graft
 import graft.operators.StreamingOps
 import graft.sources.{FileWalStream, GraftWalStream, KafkaShapedWalStream, KafkaWalStream, WalSource}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** The WalStream transport seam: the same downstream pipeline
   * (materializer → final states) must be byte-identical across
@@ -11,7 +10,7 @@ import java.nio.file.Files
 class WalStreamSpec extends SparkSpec {
 
   test("file and DSv2 transports produce identical final row states") {
-    val stage = Files.createTempDirectory("graft_walstream").toString
+    val stage = scratchDir("graft_walstream").toString
     val puts = WalSource.eventsAsWal(spark, sfDir)
       .filter(col("cells")(0)("kind") === "put")
     WalSource.writeWal(puts, s"$stage/pq", batches = 4)
@@ -42,7 +41,7 @@ class WalStreamSpec extends SparkSpec {
     // exact JSON message values a WAL producer publishes, as binary
     // `value` records like the Kafka source emits, and the downstream
     // materializer must agree byte-for-byte with the file transport
-    val stage = Files.createTempDirectory("graft_kafkaseam").toString
+    val stage = scratchDir("graft_kafkaseam").toString
     val puts = WalSource.eventsAsWal(spark, sfDir)
       .filter(col("cells")(0)("kind") === "put")
     WalSource.writeWal(puts, s"$stage/pq", batches = 4)
