@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, KeyValueGroupedDataset, SparkSe
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.model.{Cell, Mutation, RowState}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.nio.charset.StandardCharsets.UTF_8
 
 /** Stateful latest-cell-wins row materialization — the SepConsumer +
   * EventListener equivalent (SURVEY §2.G).
@@ -13,6 +15,14 @@ import graft.model.{Cell, Mutation, RowState}
   * (older (ts, seq) than the applied cell) are ignored — same
   * semantics as HBase cell versions; a row tombstone clears the cells
   * it is newer than and masks older puts that arrive after it.
+  *
+  * State format: the streaming operators keep each row's state as one
+  * `Array[Byte]` written by [[RowMaterializer.StateCodec]] (byte layout
+  * there), not as the case class. Spark resolves a struct state's
+  * decoder again for every micro-batch's plan, and `Map` fields get
+  * fresh lambda-variable ids each time, so that decoder misses the
+  * codegen cache and is compiled every batch; a binary column's decoder
+  * is the same code every batch.
   *
   * Scale: state lives in the state store partitioned by key — one
   * shuffle per micro-batch, state size O(live rows), no global sort.
@@ -42,6 +52,65 @@ object RowMaterializer {
       tombTs: Long = Never, tombSeq: Long = Never)
 
   private val Empty = RowCells(Map.empty, 0L, deleted = false)
+
+  /** The binary form of [[RowCells]] the streaming operators keep in
+    * the state store. Layout (`DataOutputStream` order, big-endian):
+    *  - the format version byte, [[StateCodec.Version]];
+    *  - `version` (long), `deleted` (byte 0/1), `putTs`, `putSeq`,
+    *    `tombTs`, `tombSeq` (longs);
+    *  - the cell count (int), then per cell its key and value (strings)
+    *    and ts and seq (longs);
+    *  - the `seen` count (int), then per entry seq and expiry (longs).
+    *
+    * A string is its UTF-8 byte length (int, -1 for null) and those
+    * bytes, so values have no 64 KB limit. A buffer of another version
+    * is refused with an error naming it. */
+  object StateCodec {
+    final val Version: Byte = 1
+
+    def encode(st: RowCells): Array[Byte] = {
+      val bytes = new ByteArrayOutputStream(64 + 40 * st.cells.size + 16 * st.seen.size)
+      val out = new DataOutputStream(bytes)
+      def putStr(s: String): Unit =
+        if (s == null) out.writeInt(-1)
+        else { val b = s.getBytes(UTF_8); out.writeInt(b.length); out.write(b) }
+      out.writeByte(Version)
+      out.writeLong(st.version)
+      out.writeBoolean(st.deleted)
+      Seq(st.putTs, st.putSeq, st.tombTs, st.tombSeq).foreach(out.writeLong(_))
+      out.writeInt(st.cells.size)
+      st.cells.foreach { case (k, c) =>
+        putStr(k); putStr(c.value); out.writeLong(c.ts); out.writeLong(c.seq)
+      }
+      out.writeInt(st.seen.size)
+      st.seen.foreach { case (seq, expiry) => out.writeLong(seq); out.writeLong(expiry) }
+      bytes.toByteArray
+    }
+
+    def decode(bytes: Array[Byte]): RowCells = {
+      val in = new DataInputStream(new ByteArrayInputStream(bytes))
+      val v = in.readByte()
+      if (v != Version) throw new IllegalStateException(
+        s"row state has format version $v; this build reads version $Version only")
+      def getStr(): String = in.readInt() match {
+        case -1 => null
+        case n => val b = new Array[Byte](n); in.readFully(b); new String(b, UTF_8)
+      }
+      val version = in.readLong()
+      val deleted = in.readBoolean()
+      val (putTs, putSeq, tombTs, tombSeq) = (in.readLong(), in.readLong(), in.readLong(), in.readLong())
+      val cells = Map.newBuilder[String, CellV]
+      (0 until in.readInt()).foreach { _ =>
+        val k = getStr()
+        cells += k -> CellV(getStr(), in.readLong(), in.readLong())
+      }
+      val seen = Map.newBuilder[Long, Long]
+      (0 until in.readInt()).foreach { _ => seen += in.readLong() -> in.readLong() }
+      if (in.available() > 0) throw new IllegalStateException(
+        s"row state has ${in.available()} trailing bytes")
+      RowCells(cells.result(), version, deleted, seen.result(), putTs, putSeq, tombTs, tombSeq)
+    }
+  }
 
   private def after(ts: Long, seq: Long, ts0: Long, seq0: Long): Boolean =
     ts > ts0 || (ts == ts0 && seq > seq0)
@@ -123,11 +192,19 @@ object RowMaterializer {
     *    `seen` map is emptied once every entry has expired;
     *  - emits nothing for a key whose batch held only replays.
     * [[ExactlyOnce]] states where this differs from the standalone
-    * dedupe. The state schema includes `seen` and the row markers, so
-    * checkpoints written before either was added cannot be resumed.
+    * dedupe.
     *
     * Any other input runs the same function under NoTimeout with an
-    * empty `seen` map. */
+    * empty `seen` map.
+    *
+    * Each row's state is one binary value, the [[StateCodec]] bytes of
+    * its [[RowCells]]: a format version byte, the version, `deleted`
+    * and the four row markers, the cells as (key, value, ts, seq), then
+    * `seen` as (seq, expiry) pairs. Its state decoder holds no map
+    * conversion, so Spark compiles it once per query instead of once
+    * per micro-batch, and a batch decodes only the rows it touches or
+    * times out. Checkpoints whose state is the earlier `RowCells`
+    * struct cannot be resumed. */
   def materialize(s: SparkSession, mutations: Dataset[Mutation]): Dataset[RowState] = {
     import s.implicits._
     ExactlyOnce.beneath(mutations) match {
@@ -143,8 +220,8 @@ object RowMaterializer {
   /** The one materialize operator; `horizonMicros` is the fused
     * dedupe's watermark delay, None without a replay filter. */
   private def consume(horizonMicros: Option[Long])(key: (String, String),
-      muts: Iterator[Mutation], state: GroupState[RowCells]): Iterator[RowState] = {
-    val st0 = state.getOption.getOrElse(Empty)
+      muts: Iterator[Mutation], state: GroupState[Array[Byte]]): Iterator[RowState] = {
+    val st0 = state.getOption.fold(Empty)(StateCodec.decode)
     val (fresh, seen) = horizonMicros match {
       case None => (muts.toSeq, st0.seen)
       case Some(delay) =>
@@ -158,12 +235,12 @@ object RowMaterializer {
         (fresh, seen)
     }
     if (fresh.isEmpty) {
-      state.update(st0.copy(seen = seen))
+      state.update(StateCodec.encode(st0.copy(seen = seen)))
       Iterator.empty
     } else {
       // WAL order within the batch: (ts, seq)
       val st = fresh.sortBy(m => (m.ts, m.seq)).foldLeft(st0)(applyMutation).copy(seen = seen)
-      state.update(st)
+      state.update(StateCodec.encode(st))
       Iterator.single(rowState(key, st))
     }
   }
@@ -175,20 +252,21 @@ object RowMaterializer {
     * horizon instead of every key ever seen.
     *
     * Input must carry a watermark on `eventTimeCol` (a TIMESTAMP
-    * column derived from the mutation ts). */
+    * column derived from the mutation ts). State is the [[StateCodec]]
+    * bytes, as in [[materialize]]. */
   def materializeWithTTL(s: SparkSession, mutations: Dataset[Mutation],
       ttlMillis: Long): Dataset[RowState] = {
     import s.implicits._
     byRow(s, mutations.toDF())
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(
-        (key: (String, String), muts: Iterator[Mutation], state: GroupState[RowCells]) => {
+        (key: (String, String), muts: Iterator[Mutation], state: GroupState[Array[Byte]]) => {
           if (state.hasTimedOut) {
             state.remove()
             Iterator.single(RowState(key._1, key._2, Map.empty, 0L, deleted = true))
           } else {
-            val st0 = state.getOption.getOrElse(Empty)
+            val st0 = state.getOption.fold(Empty)(StateCodec.decode)
             val st = muts.toSeq.sortBy(m => (m.ts, m.seq)).foldLeft(st0)(applyMutation)
-            state.update(st)
+            state.update(StateCodec.encode(st))
             // version is epoch micros; timeout at version/1000 + ttl
             state.setTimeoutTimestamp(st.version / 1000L + ttlMillis)
             Iterator.single(rowState(key, st))

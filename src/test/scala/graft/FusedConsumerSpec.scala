@@ -3,6 +3,7 @@ package graft
 import graft.model.{Cell, Mutation, RowState}
 import graft.sources.WalSource
 import graft.streaming.{ExactlyOnce, RowMaterializer}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.operators.stateful.{StatefulOperator, StreamingDeduplicateWithinWatermarkExec}
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
@@ -144,5 +145,38 @@ class FusedConsumerSpec extends SparkSpec {
     val resumed = out.batches.drop(before).flatten.map(_.rowkey).toSet
     assert(resumed == Set("r1", "r4"), s"replay-only rows re-emitted after restart: $resumed")
     assert(out.last == batchStates(segs.flatten.groupBy(_.seq).values.map(_.head).toSeq))
+  }
+
+  test("the fused consumer compiles no state decoder after its first micro-batches") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Mutation]
+    val keys = mutable.ArrayBuffer.empty[String]
+    // the sink reads flat columns only, so it compiles nothing per batch itself
+    val q = RowMaterializer.materialize(spark, ExactlyOnce.dedupe(input.toDF(), "10 minutes").as[Mutation])
+      .toDF().writeStream.outputMode("update")
+      .foreachBatch((df: DataFrame, _: Long) => keys.synchronized {
+        keys ++= df.select("rowkey").as[String].collect(); ()
+      }).start()
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    try {
+      var (compiles2, batch2) = (0L, 0L)
+      (1 to 10).foreach { i =>
+        // a new row, an update of r0 and a replay of the previous batch's
+        // new row; event time moves 5 min a batch, so the watermark does too
+        input.addData(Seq(put(2L * i, 5L * i, s"r$i", "a", s"v$i"),
+          put(2L * i + 1, 5L * i, "r0", "a", s"v$i"),
+          put(2L * (i - 1), 5L * (i - 1), s"r${i - 1}", "a", s"v${i - 1}")))
+        q.processAllAvailable()
+        if (i == 2) { compiles2 = compiles; batch2 = q.lastProgress.batchId }
+      }
+      val runs = q.lastProgress.batchId - batch2
+      val compiled = compiles - compiles2
+      info(s"$compiled compilations in $runs micro-batch runs after batch 2")
+      assert(runs >= 8)
+      // at most the watermark predicate, whose literal changes per batch
+      assert(compiled <= runs)
+      assert(keys.toSet == (0 to 10).map(i => s"r$i").toSet)
+    } finally q.stop()
   }
 }
